@@ -1,9 +1,19 @@
 """SparkSession factory with scale-oriented defaults.
 
-Defaults assume the sandbox (local[N], 32 threads); every knob is the same
-one you would set on a 1000-executor cluster — AQE for runtime re-planning
-and skew-join splitting, Arrow for the pandas-UDF extraction kernels,
-moderate shuffle partitions sized to cores at test scale.
+The session is local mode, ``local[cpus]``: ``cpus`` defaults to
+``SPARK_GRAFT_CPUS`` (32 when unset), so set it to the host's core count.
+The SQL knobs are the ones a cluster would set too: AQE for runtime
+re-planning and skew-join splitting, Arrow for the extraction UDFs, and
+shuffle partitions sized to the cores.
+
+Python workers are forked from ``aser_spark.worker_daemon``
+(``spark.python.daemon.module``), which imports the extraction stack once
+per application, so the per-worker imports and the per-task re-read of
+``pyspark.zip`` are paid once instead of per worker and per task.  The
+directory holding the ``aser_spark`` package goes on
+``spark.executorEnv.PYTHONPATH``: the daemon and every UDF that calls the
+kernel must import ``aser_spark`` whatever the working directory of the
+JVM, and in local mode this driver-side path is valid for the workers.
 """
 
 from __future__ import annotations
@@ -13,6 +23,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app="aser-spark", cpus: int | None = None, shuffle_partitions: int | None = None,
@@ -56,6 +67,8 @@ def get_spark(app="aser-spark", cpus: int | None = None, shuffle_partitions: int
         # stage mass worker exits (32 procs x 100-400MB heaps) feed the
         # sandbox kernel's reclaim backlog, the very storm being avoided.
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "aser_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

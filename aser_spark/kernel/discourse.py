@@ -856,13 +856,16 @@ def _boundary_ctx(filtered, i, step):
     """The ONE (token, pos) a D2 feature walk can observe beyond sentence
     ``i`` in direction ``step`` — exactly ``_adjacent_token``'s first move
     across the boundary (it returns after a single step); None at the
-    document edge."""
+    document edge.  Every filtered sentence has tokens (an empty one is
+    ``EMPTY_SENT_PARSED``); a neighbour without any raises ValueError, as
+    ``_adjacent_token`` would fail on it, instead of keying the D2 memo
+    like the document edge."""
     j = i + step
     if j < 0 or j >= len(filtered):
         return None
     sp = filtered[j]
     if not sp["tokens"]:
-        return None
+        raise ValueError(f"filtered sentence {j} has no tokens")
     k = -1 if step < 0 else 0
     return (sp["tokens"][k], sp["pos_tags"][k])
 

@@ -80,7 +80,9 @@ class _CompiledModel:
             lut = {s: tuple(coef_t[offset + i]) for s, i in fam_vocab.items()}
             prog.append((family, kind, lut))
             offset += len(fam_vocab)
-        assert offset == coef.shape[1], (offset, coef.shape)
+        if offset != coef.shape[1]:
+            raise ValueError(f"feature families span {offset} columns, "
+                             f"coefficients have {coef.shape[1]}")
         self.prog = prog
         if self.n_classes == 1:
             # scalar-weight program for the binary models (the bulk of

@@ -37,7 +37,7 @@ from .patterns import BIND, LEFTOVER, PATTERN_PROGRAMS, RBIND, RVETO, CLAUSE_SKI
 __all__ = ["extract_sentence_eventualities", "build_eventuality", "eid_of"]
 
 
-def _compile_prefilters():
+def _compile_prefilters(programs):
     """Per-program necessary-condition filters, compiled once at import.
 
     Every positive op in every program carries a SINGLETON label set (the
@@ -54,20 +54,28 @@ def _compile_prefilters():
 
     Both checks reject only candidates ``_run_program`` would itself reject
     (hit=False on a positive op -> None), so match results are identical —
-    the tottime just stops being dominated by trivially failing programs."""
+    the tottime just stops being dominated by trivially failing programs.
+    A program that breaks either invariant the skips rest on raises
+    ValueError here (also under ``python -O``) instead of silently losing
+    matches."""
     pf = {}
-    for name, prog in PATTERN_PROGRAMS.items():
+    for name, prog in programs.items():
         labels: set = set()
         for op in prog.positive:
-            assert len(op.labels) == 1, (name, op)
+            if len(op.labels) != 1:
+                raise ValueError(f"pattern {name!r}: positive op {op} must "
+                                 "carry exactly one label to be prefiltered")
             labels |= op.labels
         first = prog.positive[0]
+        if first.anchor != "V1":
+            raise ValueError(f"pattern {name!r}: first positive op {first} "
+                             "must be anchored on V1 to be prefiltered")
         pf[name] = (frozenset(labels), first.kind,
                     next(iter(first.labels)))
     return pf
 
 
-_PREFILTERS = _compile_prefilters()
+_PREFILTERS = _compile_prefilters(PATTERN_PROGRAMS)
 _EMPTY_SET: frozenset = frozenset()
 # the first-op labels across all programs (nsubj/nsubjpass for BIND, cop
 # for RBIND) — the verb-level check needs only these few anchor sets, so

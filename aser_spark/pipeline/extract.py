@@ -450,10 +450,20 @@ def conversation_instance_rows(conv_id, turns, memo=None, mode="seed",
     function from plain Python to materialize the DuckDB-verifiable
     instances table — so the driver's oracle checks every downstream
     aggregation against an input produced by identical kernel code (which
-    is itself golden-parity-gated vs the reference extractor)."""
+    is itself golden-parity-gated vs the reference extractor).
+
+    ``turn_idx`` must be strictly increasing: ``(conv_id, turn_idx)`` is a
+    key, and a duplicate or out-of-order turn raises ValueError naming the
+    conversation and the turn instead of emitting rows from an undefined
+    turn order."""
     from ..kernel import extract_paragraph_relations
     from ..nlp import split_sentences
 
+    for (prev, _), (turn_idx, _) in zip(turns, turns[1:]):
+        if turn_idx <= prev:
+            raise ValueError(f"conversation {conv_id!r}: turn_idx {turn_idx} "
+                             f"follows turn_idx {prev}; (conv_id, turn_idx) "
+                             "must be a key, in turn order")
     if memo is None:
         memo = _sentence_cache(mode)
     out = []
@@ -574,13 +584,16 @@ def extract_graph_instances(transcripts, num_partitions=None, pre_grouped=False,
     >=2 sentences and >=10 tokens + the boundary sentence (any realistic
     transcript; raise it for corpora of one-word turns).
 
-    Precondition (both paths): ``(conv_id, turn_idx)`` is a key.  With
-    duplicate turn indices the within-turn order is undefined in the
-    unsplit path already (the conversation stream sorts by turn_idx
-    only), and under the guard the row_number tie-break may additionally
-    place duplicates in different chunks run-to-run; the bucket bound
-    (<= 4096 rows per (conv, bucket) window partition) also assumes
-    distinct indices.  Deduplicate or re-index malformed corpora first.
+    Precondition (every path): ``(conv_id, turn_idx)`` is a key.  A
+    duplicate turn index would leave the within-turn order undefined (the
+    conversation stream sorts by turn_idx only), so the task that sees it
+    fails with the ValueError of ``conversation_instance_rows``; on the
+    ``pre_grouped`` path a conversation out of turn order fails the same
+    way.  Under the guard, duplicates take adjacent ranks, so one chunk
+    holds both as core or carried context — except with
+    ``context_turns=0``, where a pair split exactly at a chunk boundary
+    reaches no single task.  Deduplicate or re-index malformed corpora
+    first.
     """
     from pyspark.sql import functions as F
 

@@ -358,3 +358,36 @@ def test_memoized_pipeline_path_equals_document_level():
 
         assert got_nodes == want_nodes, ci
         assert got_edges == want_edges, ci
+
+
+def test_compiled_model_rejects_coefficients_of_another_width():
+    import numpy as np
+
+    from aser_spark.kernel.discourse_models import _CompiledModel
+
+    families = [("conn", "feat"), ("n_tokens", "raw")]
+    vocab = {"conn": {"because": 0, "so": 1}}
+    model = _CompiledModel(np.array([[0.5, -0.5, 2.0]]), np.array([0.25]),
+                           np.array([0, 1]), families, vocab)
+    assert model.n_classes == 1
+    with pytest.raises(ValueError, match="span 3 columns, coefficients have 4"):
+        _CompiledModel(np.zeros((1, 4)), np.zeros(1), np.array([0, 1]),
+                       families, vocab)
+
+
+def test_boundary_ctx_rejects_empty_token_neighbour():
+    """The D2 memo keys on the boundary token; a neighbour without tokens
+    must fail like the unmemoized feature walk, not alias the document
+    edge."""
+    from aser_spark.kernel.discourse import EMPTY_SENT_PARSED, _boundary_ctx
+
+    sent = {"tokens": ["it", "rained"], "pos_tags": ["PRP", "VBD"]}
+    empty = {"tokens": [], "pos_tags": []}
+    assert _boundary_ctx([sent], 0, -1) is None
+    assert _boundary_ctx([sent, EMPTY_SENT_PARSED], 0, +1) == (
+        EMPTY_SENT_PARSED["tokens"][0], EMPTY_SENT_PARSED["pos_tags"][0])
+    assert _boundary_ctx([sent, sent], 1, -1) == ("rained", "VBD")
+    with pytest.raises(ValueError, match="sentence 0 has no tokens"):
+        _boundary_ctx([empty, sent], 1, -1)
+    with pytest.raises(ValueError, match="sentence 1 has no tokens"):
+        _boundary_ctx([sent, empty], 0, +1)

@@ -245,3 +245,24 @@ def test_pattern_prefilter_is_sound_vs_unfiltered_matcher():
                                               key=lambda e: e["position"])]
                 n_checked += 1
     assert n_checked > 500
+
+
+def test_pattern_prefilter_rejects_programs_it_cannot_skip_soundly():
+    """The prefilters rest on two invariants of the pattern programs: every
+    positive op has one label, and the first is anchored on V1.  A program
+    that breaks either is refused with a ValueError (not an assert, which
+    ``python -O`` strips) instead of being mis-prefiltered."""
+    from aser_spark.kernel.extractor import _compile_prefilters
+    from aser_spark.kernel.patterns import PATTERN_PROGRAMS
+
+    sv = PATTERN_PROGRAMS["s-v"]
+    first = sv.positive[0]
+    assert _compile_prefilters({"s-v": sv})["s-v"] == (
+        frozenset({"nsubj"}), first.kind, "nsubj")
+    two_labels = sv._replace(positive=(
+        first._replace(labels=frozenset({"nsubj", "nsubjpass"})),))
+    with pytest.raises(ValueError, match="exactly one label"):
+        _compile_prefilters({"two-labels": two_labels})
+    off_anchor = sv._replace(positive=(first._replace(anchor="S1"),))
+    with pytest.raises(ValueError, match="anchored on V1"):
+        _compile_prefilters({"off-anchor": off_anchor})

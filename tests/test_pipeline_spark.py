@@ -553,3 +553,102 @@ def test_link_entities_coref_merges_candidate_pools(spark):
     assert got[("c1", "engineer")][2] == got[("c1", "the engineer")][2]
     assert got[("c1", "dog")][0] == "Q1"
     assert got[("c2", "engineer")][0] == "Q7"
+
+
+def test_workers_fork_from_preloading_daemon(spark):
+    """Python workers come from aser_spark.worker_daemon: the extraction
+    stack is imported before a task starts, and no zipimporter is left in
+    the path importer cache for the per-task invalidate_caches to re-read
+    its whole archive."""
+    def probe(batches):
+        import sys
+        import zipimport
+
+        state = {"kernel": "aser_spark.kernel" in sys.modules,
+                 "pyarrow": "pyarrow" in sys.modules,
+                 "zipimporters": sum(isinstance(f, zipimport.zipimporter)
+                                     for f in sys.path_importer_cache.values())}
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pylist([state])
+
+    df = spark.range(8, numPartitions=8).mapInArrow(
+        probe, "kernel boolean, pyarrow boolean, zipimporters long")
+    for _ in range(2):  # the second job runs in workers that already ran one
+        rows = df.collect()
+        assert len(rows) == 8
+        assert all(r.kernel and r.pyarrow for r in rows), rows
+        assert all(r.zipimporters == 0 for r in rows), rows
+
+
+_CWD_SCRIPT = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from aser_spark.config import get_spark
+from aser_spark.pipeline import extract_graph_instances
+
+spark = get_spark(app="cwd-probe", cpus=2, shuffle_partitions=2,
+                  extra={"spark.driver.memory": "1g"})
+try:
+    df = spark.createDataFrame(
+        [("c0", 0, "I ate an apple."), ("c0", 1, "Then I slept because I was tired.")],
+        "conv_id string, turn_idx int, text string")
+    plain = df.mapInPandas(lambda it: (p[["turn_idx"]] for p in it),
+                           "turn_idx int").count()
+    kinds = sorted({r.kind for r in extract_graph_instances(df).collect()})
+    print("RESULT", plain, ",".join(kinds))
+finally:
+    spark.stop()
+"""
+
+
+def test_get_spark_workers_import_package_from_any_cwd(tmp_path):
+    """A session from get_spark, started in a directory that does not hold
+    the package and with PYTHONPATH unset, still runs a plain pandas UDF
+    and the fused extraction: the package's directory reaches the workers
+    through spark.executorEnv.PYTHONPATH."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run([sys.executable, "-c", _CWD_SCRIPT, str(repo)],
+                          cwd=tmp_path, env=env, capture_output=True,
+                          text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "RESULT 2 edge,node" in proc.stdout, proc.stdout[-2000:]
+
+
+@pytest.mark.parametrize("turns,message", [
+    ([(0, "I ate."), (1, "He slept."), (1, "She left.")],
+     "turn_idx 1 follows turn_idx 1"),
+    ([(0, "I ate."), (2, "He slept."), (1, "She left.")],
+     "turn_idx 1 follows turn_idx 2"),
+])
+def test_conversation_rows_reject_duplicate_or_unordered_turns(turns, message):
+    from aser_spark.pipeline.extract import conversation_instance_rows
+
+    for mode in ("seed", "discourse"):
+        with pytest.raises(ValueError, match=f"conversation 'c0': {message}"):
+            conversation_instance_rows("c0", turns, mode=mode)
+    assert conversation_instance_rows("c0", sorted(dict(turns).items()))
+
+
+@pytest.mark.parametrize("kwargs", [{}, {"max_turns": 2, "context_turns": 1}])
+def test_extraction_fails_on_duplicate_turn_key(spark, kwargs):
+    """A duplicate (conv_id, turn_idx) fails the build, on the shuffled and
+    the skew-split path alike, instead of emitting rows from an undefined
+    turn order."""
+    from aser_spark.pipeline import extract_graph_instances
+
+    df = spark.createDataFrame(
+        [("c0", 0, "I ate an apple."), ("c0", 1, "He slept."),
+         ("c0", 1, "She left early."), ("c0", 2, "We ran home."),
+         ("c1", 0, "They sang.")],
+        "conv_id string, turn_idx int, text string")
+    with pytest.raises(Exception, match="conversation 'c0': turn_idx 1 follows turn_idx 1"):
+        extract_graph_instances(df, **kwargs).count()
