@@ -14,6 +14,9 @@ directory holding the ``aser_spark`` package goes on
 ``spark.executorEnv.PYTHONPATH``: the daemon and every UDF that calls the
 kernel must import ``aser_spark`` whatever the working directory of the
 JVM, and in local mode this driver-side path is valid for the workers.
+``spark.executorEnv.PYTHONSAFEPATH=1`` keeps ``python -m`` from putting
+the JVM's working directory first on ``sys.path``, so a worker never
+imports another checkout's ``aser_spark`` that happens to sit there.
 """
 
 from __future__ import annotations
@@ -57,18 +60,14 @@ def get_spark(app="aser-spark", cpus: int | None = None, shuffle_partitions: int
         # caches instances + aggregates and a second extraction pass runs —
         # 117s vs 30s for the identical stage at 48g)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
-        # spark.python.worker.reuse stays at its default (true): long-lived
-        # workers keep the Zipf sentence memos warm across tasks, and the
-        # cross-mode heap poison that reuse used to carry (4-8x slower
-        # kernel tasks after a prior mode's memos went resident) is fixed
-        # at the source — _sentence_cache evicts + trims the stale mode's
-        # state on switch (pipeline/extract.py; forensics in
-        # BENCH/NOTES.md §r6).  reuse=false was tried and reverted: per-
-        # stage mass worker exits (32 procs x 100-400MB heaps) feed the
-        # sandbox kernel's reclaim backlog, the very storm being avoided.
+        # spark.python.worker.reuse stays at its default (true): a reused
+        # worker saves a fork from the daemon per task, and it carries no
+        # extraction state from one task to the next — the sentence memos
+        # live for one task (pipeline/extract.py:_sentence_cache).
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "aser_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

@@ -872,14 +872,20 @@ def _boundary_ctx(filtered, i, step):
 
 def _d2_accepted(filtered, i, tree, models, cands):
     """Classifier-accepted connective spans for sentence ``i`` of the
-    relation pass, memoized per worker.
+    relation pass, memoized per process in ``_D2_MEMO``.
 
     The D2 connective features are a pure function of (the sentence's own
     tokens/pos, ONE boundary token each way, the sentence's constituency
     tree) — and the tree is itself a deterministic function of the
     sentence text for every pipeline caller (the parse memo), so
     ``(text, prev_ctx, next_ctx, tree-is-None)`` exactly keys the accepted
-    set.  Zipf-hot sentences previously re-featurized + re-classified
+    set.
+
+    Precondition: ``tree`` must be a pure function of the sentence text —
+    the one ``aser_spark.nlp.parse_sentence`` builds for it.  The key holds
+    the text, not the tree, so a caller that passes an externally built
+    tree (e.g. a reference-parsed corpus) for a text already seen gets the
+    other tree's memoized accepted set.  Such callers are unsupported.  Zipf-hot sentences previously re-featurized + re-classified
     every candidate on every occurrence in every conversation; this is
     the relation-pass sibling of the always-on ``_CAND_MEMO`` (single-
     sentence keys — high hit rate, trivial key build — unlike the
@@ -915,7 +921,12 @@ def _sentence_connective_rows(filtered, sentences, para_eventualities,
     candidates.  Per-connective independence of every stage makes this
     exactly the per-``i`` slice of the original doc-wide pass.
     ``cands_raw`` lets the caller reuse an already-extracted candidate
-    list (the sort here canonicalizes order either way)."""
+    list (the sort here canonicalizes order either way).
+
+    Precondition: ``syntax_trees[i]`` must be a pure function of sentence
+    ``i``'s text (the tree ``aser_spark.nlp.parse_sentence`` builds);
+    ``_d2_accepted`` memoizes on the text.  Externally built trees are
+    unsupported."""
     if cands_raw is None:
         cands_raw = extract_connective_candidates(filtered[i]["tokens"])
     cands = sorted(cands_raw, key=lambda x: x["connective"])

@@ -57,8 +57,10 @@ def _instances_rows(n_convs: int, seed: int, mode: str = "seed") -> list:
     from .datagen.transcripts import gen_conversation_rows
     from .pipeline.extract import _sentence_cache, conversation_instance_rows
 
-    # the pipeline's own per-worker memo factory — guarantees the oracle
-    # drives byte-identical kernel code to the Spark mapInPandas stage
+    # the pipeline's own memo factory — the oracle drives byte-identical
+    # kernel code to the Spark mapInArrow stage, with one memo for the
+    # whole corpus where Spark builds one per task (a pure-function cache,
+    # so the scope cannot change a row)
     memo = _sentence_cache(mode)
     out = []
     for ci in range(n_convs):

@@ -147,29 +147,6 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     return connected_components_star(edges, src=src, dst=dst, max_iter=max_iter)
 
 
-def mention_containment_edges(mentions: DataFrame,
-                              scope_col: str = "conv_id",
-                              mention_col: str = "mention") -> DataFrame:
-    """Coreference candidate edges within a scope (document/conversation):
-    two mentions corefer when one is a word-boundary substring of the other
-    (entity_linker.py:136-141, str_contain :328-338).  The word-boundary
-    check is instr(' '||long||' ', ' '||short||' ') — identical semantics,
-    pure codegen."""
-    a = mentions.select(F.col(scope_col).alias("_scope"),
-                        F.col(mention_col).alias("src"))
-    b = mentions.select(F.col(scope_col).alias("_scope"),
-                        F.col(mention_col).alias("dst"))
-    pad = lambda c: F.concat(F.lit(" "), F.col(c), F.lit(" "))  # noqa: E731
-    return (
-        a.join(b, "_scope")
-        .filter(F.col("src") < F.col("dst"))
-        .filter(pad("src").contains(pad("dst")) | pad("dst").contains(pad("src")))
-        .select(F.col("_scope").alias(scope_col),
-                F.concat_ws("|", "_scope", "src").alias("src"),
-                F.concat_ws("|", "_scope", "dst").alias("dst"))
-    )
-
-
 def coref_components(mentions: DataFrame, scope_col: str = "conv_id",
                      mention_col: str = "mention") -> DataFrame:
     """(scope, mention, component): containment-coreference clusters per

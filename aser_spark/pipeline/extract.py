@@ -1,109 +1,31 @@
-"""Extraction operators: eventualities (P1-P3/F3-F5), relations (J1/J2/D7),
-and the fused single-pass graph-instance extractor.
+"""The fused single-pass extractor: transcripts -> eventuality (node) and
+relation (edge) instance rows, plus the per-sentence parse-coverage table.
 
 Scale design
 ------------
-* ``extract_eventualities`` is per-sentence -> pure ``mapInPandas``
-  flatMap, NO shuffle.
-* relations need whole-conversation context (adjacent-sentence pairing J2 +
+* Relations need whole-conversation context (adjacent-sentence pairing J2 +
   connective windows), so the conversation is the group.  Instead of
   ``groupBy(conv_id).applyInPandas`` (one pandas DataFrame per tiny group —
   per-group overhead dominates at 10^11 conversations) we do ONE hash
   repartition by conv_id + sortWithinPartitions, then stream Arrow batches
-  through ``mapInPandas`` with a boundary-carry buffer: whole batches are
-  processed vectorially and only the conversation straddling a batch edge is
-  deferred.  One shuffle total, and it is the unavoidable one.
-* ``extract_graph_instances`` fuses parse + eventualities + relations in
-  that single pass so each turn is parsed exactly once; output is the
+  through ``mapInArrow`` with a boundary-carry buffer: whole batches are
+  processed in one pass and only the conversation straddling a batch edge
+  is deferred.  One shuffle total, and it is the unavoidable one.
+* ``extract_graph_instances`` parses each turn exactly once and runs the
+  eventuality and relation kernels in that same pass; output is the
   unified INSTANCE_SCHEMA (kind='node'|'edge'), splittable by a cheap
   filter downstream.
+* Sentence memos live for one Spark task (``_sentence_cache``): a worker
+  holds no memo state between tasks, so nothing needs evicting.
 """
 
 from __future__ import annotations
 
-from ..schemas import (EVENTUALITY_INSTANCE_SCHEMA, INSTANCE_SCHEMA,
-                       RELATION_INSTANCE_SCHEMA)
-
-_EV_COLS = [f.name for f in EVENTUALITY_INSTANCE_SCHEMA.fields]
-_REL_COLS = [f.name for f in RELATION_INSTANCE_SCHEMA.fields]
-_INST_COLS = [f.name for f in INSTANCE_SCHEMA.fields]
+from ..schemas import INSTANCE_SCHEMA
 
 
-def _evict_sentence_memos(modes) -> None:
-    """Shared eviction path: drop the given modes' memos, make the frozen
-    objects collectable again, collect, and return the freed arenas to the
-    OS.  The malloc_trim matters as much as the collect — the observed
-    damage is resident-heap/allocator state, not reachable garbage
-    (BENCH/NOTES.md §r6)."""
-    import ctypes
-    import gc
-
-    dropped = False
-    for m in list(modes):
-        if m in _SENT_MEMOS:
-            del _SENT_MEMOS[m]
-            _MEMO_GEN.pop(m, None)
-            dropped = True
-    if not dropped:
-        return
-    gc.unfreeze()    # frozen memo objects become collectable again
-    _GC_TUNED.clear()  # next _freeze_longlived() re-freezes survivors
-    gc.collect()
-    try:
-        ctypes.CDLL("libc.so.6").malloc_trim(0)
-    except OSError:
-        pass
-
-
-def release_extraction_memory(spark=None, n_tasks: int | None = None) -> None:
-    """Release the per-worker sentence-memo state (ALL modes) and return
-    the freed memory to the OS — in the reused python workers when a
-    SparkSession is given (via a tiny flush job that cycles the worker
-    pool), else in the calling process.
-
-    Why this exists: after an extraction stage's output is materialized,
-    the workers' resident memo state (up to 100-400MB each in discourse
-    mode — parse trees, separator tables) is pure liability.  Measured at
-    sf0.1 local[32]: the JVM aggregations right after a discourse extract
-    read 21-30s against a 2.5s healthy cost, and a warm same-mode rerun
-    of the extract itself read ~117s against 9.4s in fresh workers, with
-    every flanking JVM calib healthy — the resident worker heaps are the
-    slowdown, exactly the r6 cross-mode mechanism but within one mode.
-    A pipeline should call this between an extraction stage and unrelated
-    downstream stages; bench.py calls it per rep.
-
-    The flush job is best-effort: Spark hands tasks to idle pool workers,
-    so ``n_tasks`` (default 4x defaultParallelism) cycles the pool several
-    times over; a missed worker just keeps its memo (correctness is
-    unaffected — the memo is a pure-function cache)."""
-    if spark is None:
-        _evict_sentence_memos(list(_SENT_MEMOS))
-        return
-    import pandas as pd
-
-    sc = spark.sparkContext
-    if n_tasks is None:
-        n_tasks = sc.defaultParallelism * 4
-
-    def flush(batches):
-        # resolve the module globals at RUNTIME (inside the worker): a
-        # direct reference would make cloudpickle serialize _SENT_MEMOS by
-        # value with the closure — unpicklable lru_cache state — whenever
-        # the DRIVER process also holds memos (e.g. after driver-side
-        # kernel use in tests/serving)
-        from aser_spark.pipeline import extract as _ex
-
-        _ex._evict_sentence_memos(list(_ex._SENT_MEMOS))
-        for b in batches:
-            pass
-        yield pd.DataFrame({"ok": [1]})
-
-    (spark.range(0, n_tasks, 1, n_tasks)
-     .mapInPandas(flush, schema="ok int").count())
-
-
-def _sentence_cache(mode: str = "seed", generation=None):
-    """Per-worker memo of sentence -> (parsed, eventualities).
+def _sentence_cache(mode: str = "seed"):
+    """A fresh memo of sentence -> (parsed, eventualities).
 
     ``mode='discourse'`` runs the v2.0 path instead: connective candidate
     scan -> clause split (constituency SBAR + separators) -> per-clause
@@ -114,195 +36,83 @@ def _sentence_cache(mode: str = "seed", generation=None):
     hungry.") recur millions of times, and parse+extract is a pure function
     of the sentence text.  The reference exploits the same idea with its
     per-paragraph syntax_tree_cache (/root/reference/aser/extract/
-    eventuality_extractor.py:614); here the cache lives for the python
-    worker's lifetime (workers are reused across tasks), so every hot
-    sentence is parsed once per worker instead of once per occurrence.
+    eventuality_extractor.py:614); here each Spark task builds one memo at
+    its start and drops it when it ends, so every hot sentence is parsed
+    once per task, and no worker keeps memo state from one task to the
+    next.
 
     Contract: cached parsed dicts / eventuality records are SHARED —
     downstream code must treat them as frozen (it does: rows are built by
-    reading fields only).
+    reading fields only)."""
+    from functools import lru_cache
 
-    One mode resident at a time: switching modes EVICTS the other mode's
-    memos, unfreezes + collects them, and returns the freed arenas to the
-    OS (malloc_trim).  A reused worker whose heap still holds a prior
-    mode's memo state ran the next mode's kernel 4-8x slower on pure CPU
-    (sf0.1 discourse after seed: 31-68s vs 8.5s in fresh workers;
-    python-cpu 666s vs ~200s for identical work) — heap-locality damage
-    from the resident state, not cyclic GC (a per-mode re-freeze alone
-    did not recover it; eviction + trim does, measured back to 8.4s).
-    Full forensics: BENCH/NOTES.md §r6.  Rebuilding an evicted memo later
-    costs seconds; mixed-mode pipelines alternate per STAGE, not per
-    task, so thrash is bounded by the number of mode switches.
+    from ..kernel import extract_sentence_eventualities
+    from ..nlp import parse_sentence
 
-    ``generation``: SAME-mode eviction trigger (r7).  The damage above is
-    resident state, not mode mismatch — a warm same-mode RERUN of the
-    sf0.1 discourse extract measured ~117s vs 9.4s in fresh workers
-    (healthy flanking calibs both times).  Passing a generation value
-    different from the one the memo was built under evicts and rebuilds
-    it at task start, so repeated runs (bench reps, multi-batch
-    pipelines) each start in the fresh-worker regime.  None (default)
-    never forces eviction."""
-    fresh = (generation is not None
-             and mode in _SENT_MEMOS and _MEMO_GEN.get(mode) != generation)
-    if mode not in _SENT_MEMOS or fresh:
-        stale = [m for m in _SENT_MEMOS if m != mode]
-        if fresh:
-            stale.append(mode)
-        _evict_sentence_memos(stale)
-        from functools import lru_cache
+    if mode == "discourse":
+        from ..kernel.discourse import (_sentence_clause_eventualities,
+                                        sentence_connective_separators)
+        from ..nlp.syntax import SyntaxTree
 
-        from ..kernel import extract_sentence_eventualities
-        from ..nlp import parse_sentence
+        @lru_cache(maxsize=16384)
+        def parse_one(sentence: str):
+            # render_parse=False: the kernel consumes the tree object,
+            # never the PTB bracket string — skip rendering it
+            p, root = parse_sentence(sentence, with_tree=True,
+                                     render_parse=False)
+            return p, SyntaxTree.from_root(root)
 
-        import os
-        _sz = int(os.environ.get("ASER_MEMO_SCALE_PCT", "100"))
+        # two-level memo: ctx = (token, pos_tag) adjacent to this
+        # sentence in the conversation (or None at the edges) is the
+        # ONLY document state the D2 connective classifier can see
+        # (one-token boundary leak, kernel/discourse.py), so
+        # (sentence, ctx) exactly keys the SEPARATOR decision — while
+        # the expensive clause re-extraction depends only on
+        # (sentence, separators), a far lower-cardinality key that
+        # collapses the many contexts yielding identical separators.
+        @lru_cache(maxsize=65536)
+        def seps_one(sentence: str, prev_ctx, next_ctx):
+            p, tree = parse_one(sentence)
+            return sentence_connective_separators(
+                p["tokens"], p["pos_tags"], tree, prev_ctx, next_ctx)
 
-        def _scaled(base):
-            return max(base * _sz // 100, 1024)
+        @lru_cache(maxsize=16384)
+        def clause_evs(sentence: str, sep: tuple):
+            p, tree = parse_one(sentence)
+            return _sentence_clause_eventualities(
+                p["tokens"], p["lemmas"], p["pos_tags"],
+                p["dependencies"], tree, set(sep),
+                ners=p.get("ners"), mentions=p.get("mentions"))
 
-        if mode == "discourse":
-            from ..kernel.discourse import (
-                _sentence_clause_eventualities,
-                sentence_connective_separators)
-            from ..nlp.syntax import SyntaxTree
+        def one(sentence: str, prev_ctx=None, next_ctx=None):
+            p, tree = parse_one(sentence)
+            sep = seps_one(sentence, prev_ctx, next_ctx)
+            return p, clause_evs(sentence, sep), tree
 
-            @lru_cache(maxsize=_scaled(16384))
-            def parse_one(sentence: str):
-                # render_parse=False: the kernel consumes the tree object,
-                # never the PTB bracket string — skip rendering it
-                p, root = parse_sentence(sentence, with_tree=True,
-                                         render_parse=False)
-                return p, SyntaxTree.from_root(root)
+        one.parse = parse_one
+        return one
 
-            # two-level memo: ctx = (token, pos_tag) adjacent to this
-            # sentence in the conversation (or None at the edges) is the
-            # ONLY document state the D2 connective classifier can see
-            # (one-token boundary leak, kernel/discourse.py), so
-            # (sentence, ctx) exactly keys the SEPARATOR decision — while
-            # the expensive clause re-extraction depends only on
-            # (sentence, separators), a far lower-cardinality key that
-            # collapses the many contexts yielding identical separators.
-            @lru_cache(maxsize=_scaled(65536))
-            def seps_one(sentence: str, prev_ctx, next_ctx):
-                p, tree = parse_one(sentence)
-                return sentence_connective_separators(
-                    p["tokens"], p["pos_tags"], tree, prev_ctx, next_ctx)
+    @lru_cache(maxsize=8192)
+    def one(sentence: str):
+        # render_parse=False: seed extraction reads tokens/lemmas/
+        # pos/deps only — skip the constituency build + PTB render
+        # (~20% of a seed parse)
+        p = parse_sentence(sentence, render_parse=False)
+        evs = extract_sentence_eventualities(
+            p["tokens"], p["lemmas"], p["pos_tags"], p["dependencies"],
+            ners=p.get("ners"), mentions=p.get("mentions"))
+        return p, evs
 
-            @lru_cache(maxsize=_scaled(16384))
-            def clause_evs(sentence: str, sep: tuple):
-                p, tree = parse_one(sentence)
-                return _sentence_clause_eventualities(
-                    p["tokens"], p["lemmas"], p["pos_tags"],
-                    p["dependencies"], tree, set(sep),
-                    ners=p.get("ners"), mentions=p.get("mentions"))
-
-            def one(sentence: str, prev_ctx=None, next_ctx=None):
-                p, tree = parse_one(sentence)
-                sep = seps_one(sentence, prev_ctx, next_ctx)
-                return p, clause_evs(sentence, sep), tree
-
-            one.parse = parse_one
-        else:
-            @lru_cache(maxsize=_scaled(8192))
-            def one(sentence: str):
-                # render_parse=False: seed extraction reads tokens/lemmas/
-                # pos/deps only — skip the constituency build + PTB render
-                # (~20% of a seed parse)
-                p = parse_sentence(sentence, render_parse=False)
-                evs = extract_sentence_eventualities(
-                    p["tokens"], p["lemmas"], p["pos_tags"], p["dependencies"],
-                    ners=p.get("ners"), mentions=p.get("mentions"))
-                return p, evs
-
-        _SENT_MEMOS[mode] = one
-        _MEMO_GEN[mode] = generation
-    return _SENT_MEMOS[mode]
-
-
-_SENT_MEMOS: dict = {}
-_MEMO_GEN: dict = {}
-
-
-def _ev_record_to_row(conv_id, turn_idx, sent_idx, e):
-    return (
-        conv_id, turn_idx, sent_idx, e["eid"], e["pattern"], e["words"],
-        e["pos_tags"], [tuple(d) for d in e["dependencies"]],
-        e["skeleton_word_indices"], e["verb_indices"], e["position"],
-        e["frequency"],
-    )
-
-
-def extract_eventualities(parsed):
-    """parsed sentences -> eventuality instance rows (no shuffle)."""
-    import pandas as pd
-
-    def run(batches):
-        from ..kernel import extract_sentence_eventualities
-
-        for pdf in batches:
-            out = []
-            for conv_id, turn_idx, sent_idx, tokens, lemmas, tags, deps in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["sent_idx"], pdf["tokens"],
-                pdf["lemmas"], pdf["pos_tags"], pdf["dependencies"],
-            ):
-                evs = extract_sentence_eventualities(
-                    list(tokens), list(lemmas), list(tags),
-                    [(int(d["gov"]), d["rel"], int(d["dep"])) for d in deps],
-                )
-                out.extend(
-                    _ev_record_to_row(conv_id, int(turn_idx), int(sent_idx), e)
-                    for e in evs
-                )
-            yield _frame(out, _EV_COLS)
-
-    return parsed.mapInPandas(run, schema=EVENTUALITY_INSTANCE_SCHEMA)
+    return one
 
 
 def _conversation_stream(batches, columns, key_col="conv_id"):
-    """Group sorted Arrow batches into per-conversation row lists, carrying
-    the boundary conversation across batch edges.
+    """Group sorted Arrow record batches into per-conversation row lists,
+    carrying the boundary conversation across batch edges.
 
     Hot path: boundaries are found on the raw numpy id array and rows are
-    materialized via zip over .tolist() columns — ~5x cheaper than
-    pandas groupby + itertuples for many small groups."""
-    import numpy as np
-
-    carry_key, carry_rows = None, []
-    for pdf in batches:
-        n = len(pdf)
-        if n == 0:
-            continue
-        ids = pdf[key_col].to_numpy()
-        arrs = [pdf[c].tolist() for c in columns]
-        change = np.flatnonzero(ids[1:] != ids[:-1]) + 1
-        bounds = [0, *change.tolist(), n]
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            key = ids[s]
-            rows = list(zip(*(a[s:e] for a in arrs)))
-            if key == carry_key:
-                carry_rows.extend(rows)
-                continue
-            if carry_key is not None:
-                yield carry_key, carry_rows
-            carry_key, carry_rows = key, rows
-    if carry_key is not None:
-        yield carry_key, carry_rows
-
-
-def _frame(rows, columns):
-    """Columnar DataFrame construction (avoids per-cell object inference)."""
-    import pandas as pd
-
-    if not rows:
-        return pd.DataFrame({c: [] for c in columns})
-    return pd.DataFrame(dict(zip(columns, map(list, zip(*rows)))))
-
-
-def _conversation_stream_arrow(batches, columns, key_col="conv_id"):
-    """Arrow-native sibling of ``_conversation_stream`` for ``mapInArrow``
-    stages: consumes pyarrow RecordBatches instead of pandas frames.
-    Same boundary-carry contract; ``to_pylist`` is a single C call per
-    column versus pandas' block extraction + ``tolist``."""
+    materialized via zip over ``to_pylist`` columns (a single C call per
+    column) — far cheaper than a groupby for many small groups."""
     import numpy as np
 
     carry_key, carry_rows = None, []
@@ -342,41 +152,6 @@ def _arrow_frame(rows, arrow_schema):
     return pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
 
 
-_GC_TUNED: set = set()
-
-
-def _freeze_longlived(mode: str = "seed"):
-    """Take the worker's long-lived objects (sentence memos, compiled
-    classifier tables — millions of small objects that survive for the
-    worker's lifetime) out of the cyclic GC's frequent-scan path.  Reused
-    python workers otherwise pay gen2 collections repeatedly inside every
-    allocation-heavy extraction task.
-
-    Freeze runs once per worker per MODE (collect first, so no garbage is
-    frozen).  Once-per-worker was not enough: the first task freezes an
-    EMPTY state, so everything the seed stage then builds (a 16k-entry
-    parse LRU whose values are node trees + leaf-index caches) stays in
-    gen2 unfrozen, and a later discourse stage's allocation bursts scan
-    those millions of objects on every gen2 collection — measured 4-8x
-    on the full sf0.1 discourse stage in REUSED workers (31-68s) vs
-    fresh workers (8.5s), reproducible with spark.python.worker.reuse
-    on/off (BENCH/NOTES.md §r6).  Re-freezing at the first task of the
-    NEXT mode captures the prior mode's resident memos.  Bounded leak:
-    entries evicted from a frozen LRU after a mode switch stay
-    unreclaimed, capped by the LRU sizes at the (at most two) freeze
-    points, not by corpus churn."""
-    global _GC_TUNED
-    if mode in _GC_TUNED:
-        return
-    import gc
-
-    gc.collect()
-    gc.freeze()
-    if not _GC_TUNED:
-        gc.set_threshold(50_000, 25, 50)
-    _GC_TUNED.add(mode)
-
-
 def _group_by_conv(df, num_partitions=None):
     """Hash-repartition by conv_id with an EXPLICIT partition count.
 
@@ -391,49 +166,15 @@ def _group_by_conv(df, num_partitions=None):
     if num_partitions is None:
         sc = df.sparkSession.sparkContext
         num_partitions = max(sc.defaultParallelism, 8)
-    cols = ["conv_id", "turn_idx"] + (["sent_idx"] if "sent_idx" in df.columns else [])
-    return df.repartition(num_partitions, "conv_id").sortWithinPartitions(*cols)
-
-
-def extract_relations(parsed, num_partitions=None):
-    """parsed sentences -> relation instance rows.
-
-    Re-runs the (cheap) eventuality kernel inside the conversation group so
-    this operator composes standalone; the fused path below shares the work.
-    """
-    import pandas as pd
-
-    cols = ["turn_idx", "sent_idx", "tokens", "lemmas", "pos_tags", "dependencies"]
-
-    def run(batches):
-        from ..kernel import (extract_paragraph_relations,
-                              extract_sentence_eventualities)
-
-        _freeze_longlived()
-        out = []
-        for conv_id, rows in _conversation_stream(batches, cols):
-            sentences, para_evs = [], []
-            for turn_idx, sent_idx, tokens, lemmas, tags, deps in rows:
-                dep_t = [(int(d["gov"]), d["rel"], int(d["dep"])) for d in deps]
-                sentences.append({"tokens": list(tokens), "dependencies": dep_t})
-                para_evs.append(extract_sentence_eventualities(
-                    list(tokens), list(lemmas), list(tags), dep_t))
-            for hid, tid, sense, w in extract_paragraph_relations(sentences, para_evs):
-                out.append((conv_id, hid, tid, sense, w))
-            if len(out) >= 8192:
-                yield _frame(out, _REL_COLS)
-                out = []
-        yield _frame(out, _REL_COLS)
-
-    return _group_by_conv(parsed, num_partitions).mapInPandas(
-        run, schema=RELATION_INSTANCE_SCHEMA
-    )
+    return (df.repartition(num_partitions, "conv_id")
+            .sortWithinPartitions("conv_id", "turn_idx"))
 
 
 def conversation_instance_rows(conv_id, turns, memo=None, mode="seed",
                                emit_turns=None):
     """Pure per-conversation kernel: ``turns`` = (turn_idx, text) pairs in
-    turn order -> INSTANCE_SCHEMA tuples (node + edge rows).
+    turn order -> INSTANCE_SCHEMA tuples (node + edge rows).  ``memo`` is a
+    ``_sentence_cache(mode)`` memo; None builds a fresh one for this call.
 
     ``emit_turns=(lo, hi)`` restricts emission to rows anchored at turns in
     ``lo <= turn_idx < hi`` while the surrounding turns still provide
@@ -445,7 +186,7 @@ def conversation_instance_rows(conv_id, turns, memo=None, mode="seed",
     (kernel/relations.py + kernel/discourse.py ``window=``).
 
     This is the single source of truth for the fused extraction semantics:
-    the Spark ``mapInPandas`` stage below streams conversations through it,
+    the Spark ``mapInArrow`` stage below streams conversations through it,
     and the oracle stager (aser_spark/oracle_stage.py) drives the SAME
     function from plain Python to materialize the DuckDB-verifiable
     instances table — so the driver's oracle checks every downstream
@@ -533,8 +274,7 @@ def conversation_instance_rows(conv_id, turns, memo=None, mode="seed",
 
 
 def extract_graph_instances(transcripts, num_partitions=None, pre_grouped=False,
-                            mode="seed", max_turns=None, context_turns=2,
-                            memo_generation=None):
+                            mode="seed", max_turns=None, context_turns=2):
     """Fused flagship pass: transcripts -> unified node+edge instance rows.
 
     One shuffle (repartition by conv_id), one parse per turn, kernel
@@ -603,12 +343,9 @@ def extract_graph_instances(transcripts, num_partitions=None, pre_grouped=False,
         from pyspark.sql.pandas.types import to_arrow_schema
 
         arrow_schema = to_arrow_schema(INSTANCE_SCHEMA)
-        # evicts a stale mode — and, under a new memo_generation, this
-        # mode's own resident memo — FIRST
-        memo = _sentence_cache(mode, memo_generation)
-        _freeze_longlived(mode)  # then freeze the survivors + new tables
+        memo = _sentence_cache(mode)  # one memo per task
         out = []
-        for conv_id, rows in _conversation_stream_arrow(batches, cols):
+        for conv_id, rows in _conversation_stream(batches, cols):
             out.extend(conversation_instance_rows(conv_id, rows, memo, mode))
             if len(out) >= 16384:
                 yield _arrow_frame(out, arrow_schema)
@@ -628,12 +365,11 @@ def extract_graph_instances(transcripts, num_partitions=None, pre_grouped=False,
         from pyspark.sql.pandas.types import to_arrow_schema
 
         arrow_schema = to_arrow_schema(INSTANCE_SCHEMA)
-        memo = _sentence_cache(mode, memo_generation)  # evict stale FIRST
-        _freeze_longlived(mode)  # then freeze the survivors + new tables
+        memo = _sentence_cache(mode)  # one memo per task
         out = []
         chunk_cols = ["rk", "turn_idx", "text"]
-        for gkey, rows in _conversation_stream_arrow(batches, chunk_cols,
-                                                     key_col="gkey"):
+        for gkey, rows in _conversation_stream(batches, chunk_cols,
+                                               key_col="gkey"):
             conv_id, _, chunk = gkey.rpartition("\x00")
             lo = int(chunk) * m
             # core = ranks in [lo, lo+m); ranks map monotonically onto
@@ -714,10 +450,6 @@ def extract_graph_instances(transcripts, num_partitions=None, pre_grouped=False,
 COVERAGE_SCHEMA = ("conv_id string, turn_idx int, sent_idx int, "
                    "n_tokens int, pos_tags string, n_eventualities int, "
                    "covered boolean")
-_COV_COLS = ["conv_id", "turn_idx", "sent_idx", "n_tokens", "pos_tags",
-             "n_eventualities", "covered"]
-
-
 def _coverage_struct():
     """StructType equivalent of COVERAGE_SCHEMA, built without a JVM (the
     DDL parser needs an active session — unavailable inside workers)."""
@@ -741,7 +473,8 @@ def turn_coverage_rows(conv_id, turn_idx, text, memo=None):
     fallback row (n_eventualities=0, covered=false) instead of vanishing.
     This is the defined OOG behavior: the parser/kernel never raise on
     arbitrary text, and the coverage table makes the grammar's reach over
-    a corpus measurable (fraction of covered sentences)."""
+    a corpus measurable (fraction of covered sentences).  ``memo=None``
+    builds a fresh seed memo for this call."""
     from ..nlp import split_sentences
 
     if memo is None:
@@ -757,16 +490,15 @@ def turn_coverage_rows(conv_id, turn_idx, text, memo=None):
 def parse_coverage(transcripts):
     """Per-sentence grammar-coverage table over a transcript corpus:
     (conv_id, turn_idx, sent_idx, n_tokens, pos_tags, n_eventualities,
-    covered).  Shuffle-free ``mapInPandas`` (rows are independent per
+    covered).  Shuffle-free ``mapInArrow`` (rows are independent per
     turn — no cross-sentence context is needed for seed-mode coverage),
-    memoized per worker like the extraction kernel.  The aggregate
+    with one sentence memo per task like the extraction kernel.  The aggregate
     coverage fraction is one map-side-combining AVG over the output."""
     def run(batches):
         from pyspark.sql.pandas.types import to_arrow_schema
 
         arrow_schema = to_arrow_schema(_coverage_struct())
-        _freeze_longlived()
-        memo = _sentence_cache("seed")
+        memo = _sentence_cache("seed")  # one memo per task
         for rb in batches:
             out = []
             for conv_id, turn_idx, text in zip(

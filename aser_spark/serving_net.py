@@ -59,9 +59,12 @@ def _jsonable(obj):
 
 
 class _KernelOps:
-    """Compute-command implementations, shared by every handler thread
-    (the memo caches are the per-worker sentence caches — identical code
-    path to the Spark mapInPandas kernel)."""
+    """Compute-command implementations, shared by every handler thread.
+
+    The server owns one long-lived sentence memo, built once here by the
+    same ``_sentence_cache`` factory whose memos a Spark extraction task
+    builds and drops per task — identical kernel code path, but warm for
+    the life of the server."""
 
     def __init__(self, mode: str = "seed", concept_topk: int = 5):
         from .pipeline.concepts import probase_rows

@@ -19,11 +19,19 @@ every task, so the invalidation has nothing to re-read.  An import that
 has to search an archive again rebuilds its importer from zipimport's own
 directory cache, without reading the archive.
 
+It also freezes the preloaded objects out of the cyclic GC before the
+first fork: ``pyspark.daemon`` runs ``gc.collect()`` after every task of a
+reused worker, and each of those collections would otherwise rescan every
+module the daemon imported.  Workers inherit the freeze and the raised
+generation-0 threshold (extraction tasks allocate many short-lived
+objects).
+
 Spark runs it as ``python -m aser_spark.worker_daemon``.
 """
 
 from __future__ import annotations
 
+import gc
 import importlib
 import sys
 import zipimport
@@ -61,6 +69,9 @@ def main() -> None:
     # the daemon's traceback from every Python UDF
     for name in PRELOAD:
         importlib.import_module(name)
+    gc.collect()
+    gc.freeze()
+    gc.set_threshold(50_000, 25, 50)
     run_task = daemon.worker_main
 
     def worker_main(infile, outfile):

@@ -8,9 +8,10 @@ record outgrew the capture window and the graded headline was lost, so
 the last line is guaranteed small):
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
 
-Stage order: the discourse-mode build runs FIRST (fresh python workers —
-no cross-mode memo state can exist; r6 VERDICT #1), then the seed build,
-enrichment, and the relational/dedup/ANN heads.
+Stage order: the discourse-mode build runs FIRST (fresh python workers;
+r6 VERDICT #1), then the seed build, enrichment, and the relational/
+dedup/ANN heads.  Sentence memos live for one task, so no stage inherits
+another's memo state.
 
 Headline = the flagship KG build (transcripts -> parse -> extract ->
 aggregate -> core filter) sized to the scale factor (~200k turns at sf0.1),
@@ -174,38 +175,18 @@ def main():
     # kernel cost; running discourse into FRESH python workers removes any
     # possible cross-mode worker state from the graded number, and the
     # per-substage timings below attribute whatever remains. ---------------
-    _disc_gen = [0]
-
     def _run_discourse():
         # each run rebuilds from the persisted transcripts only — caches
         # dropped inside — so the rerun measures the full discourse
         # dataflow, not a warm cache.  Substages timed separately so a slow
         # record shows WHERE the time went (extract UDF pass vs the two
         # hash aggregations) instead of one opaque number.
-        #
-        # memo_generation bumps per rep: the r7 substage forensics showed a
-        # warm SAME-mode rerun of this extract reads ~117s vs 9.4s in
-        # fresh workers (resident worker-heap damage, healthy flanks both
-        # times) — each rep therefore evicts the prior rep's memo state at
-        # task start and runs in the fresh-worker regime.  After the
-        # extract is materialized the memos are pure liability for the JVM
-        # aggs (rep-1 aggs read 21-30s vs 2.5s healthy), so the flush job
-        # releases worker RSS before them; its cost is charged to the
-        # stage (release_sec recorded inside the substage table).
-        from aser_spark.pipeline.extract import release_extraction_memory
-
-        _disc_gen[0] += 1
         sub: dict[str, float] = {}
         t0 = time.time()
         inst_d = extract_graph_instances(transcripts, pre_grouped=True,
-                                         mode="discourse",
-                                         memo_generation=_disc_gen[0]
-                                         ).persist()
+                                         mode="discourse").persist()
         inst_d.count()
         sub["extract"] = round(time.time() - t0, 3)
-        t1 = time.time()
-        release_extraction_memory(spark)
-        sub["release"] = round(time.time() - t1, 3)
         t1 = time.time()
         extras["n_nodes_discourse"] = aggregate_nodes(
             nodes_from_instances(inst_d)).count()
@@ -220,12 +201,6 @@ def main():
 
     d = adaptive_group("discourse", _run_discourse, reps=2,
                        accept_below={"kg_build_discourse": 25.0})
-    # pre-pay the cross-mode eviction outside the seed stage's clock
-    # (otherwise each worker's first seed task carries it)
-    t0 = time.time()
-    from aser_spark.pipeline.extract import release_extraction_memory
-    release_extraction_memory(spark)
-    extras["release_after_discourse_sec"] = round(time.time() - t0, 3)
     # recorded as an extra, not in the headline sum: headline_total keeps
     # the round-1/2 stage set so the driver's round-over-round comparison
     # stays apples-to-apples
@@ -306,14 +281,6 @@ def main():
             state["core_nodes"], toy_kb(spark)).count()
         sample["entity_linking"] = round(time.time() - t0, 3)
         return sample
-
-    # the seed memos are dead weight for the enrichment group (lineage and
-    # conceptualization are JVM plans over the cached instances; entity
-    # linking's python side is the small coref applyInPandas) — release
-    # the worker RSS before it, same rationale as the discourse stage
-    t0 = time.time()
-    release_extraction_memory(spark)
-    extras["release_after_kg_build_sec"] = round(time.time() - t0, 3)
 
     timings.update(adaptive_group("enrich", _run_enrich, reps=2))
 

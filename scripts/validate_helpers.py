@@ -9,6 +9,9 @@ import types
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+# the reference ASER checkout every loader below reads; parity tests skip
+# when it is absent
+REFERENCE_ROOT = Path("/root/reference")
 
 
 def _stub_module(name, **attrs):
@@ -113,8 +116,8 @@ def load_reference_modules():
                  LogisticRegressionCV=_Dummy)
     _stub_module("sklearn.multiclass", OneVsRestClassifier=_Dummy)
 
-    if "/root/reference" not in sys.path:
-        sys.path.insert(0, "/root/reference")
+    if str(REFERENCE_ROOT) not in sys.path:
+        sys.path.insert(0, str(REFERENCE_ROOT))
     from aser.extract.discourse_parser import ConnectiveExtractor
     from aser.extract.eventuality_extractor import SeedRuleEventualityExtractor
     from aser.extract.rule import CLAUSE_WORDS
@@ -125,7 +128,7 @@ def load_reference_modules():
     ev_ext.is_externel_corenlp = True  # silence __del__ on the __new__ instance
 
     ce = ConnectiveExtractor.__new__(ConnectiveExtractor)
-    conn_path = Path("/root/reference/aser/extract/discourse/conn_feats/exp_conn.txt")
+    conn_path = REFERENCE_ROOT / "aser/extract/discourse/conn_feats/exp_conn.txt"
     ce.sorted_conn = sorted(
         line.rstrip() for line in conn_path.read_text().splitlines() if line.rstrip())
 
@@ -156,7 +159,7 @@ def load_reference_connective_extractor():
     load_reference_modules()  # installs stubs + sys.path
     from aser.extract.discourse_parser import ConnectiveExtractor
 
-    base = Path("/root/reference/aser/extract/discourse/conn_feats")
+    base = REFERENCE_ROOT / "aser/extract/discourse/conn_feats"
     ce = ConnectiveExtractor.__new__(ConnectiveExtractor)
     ce.sorted_conn = sorted(
         line.rstrip() for line in (base / "exp_conn.txt").read_text().splitlines()
@@ -178,7 +181,7 @@ def load_reference_explicit_classifier():
     load_reference_modules()
     from aser.extract.discourse_parser import ExplicitSenseClassifier
 
-    base = Path("/root/reference/aser/extract/discourse/explicit_feats")
+    base = REFERENCE_ROOT / "aser/extract/discourse/explicit_feats"
     ec = ExplicitSenseClassifier.__new__(ExplicitSenseClassifier)
     ec.sorted_conn = sorted(
         line.rstrip() for line in (base / "exp_conn.txt").read_text().splitlines()
@@ -208,7 +211,7 @@ def load_reference_ss_arg_extractor():
     load_reference_modules()
     from aser.extract.discourse_parser import SSArgumentExtractor
 
-    base = Path("/root/reference/aser/extract/discourse")
+    base = REFERENCE_ROOT / "aser/extract/discourse"
     ss = SSArgumentExtractor.__new__(SSArgumentExtractor)
     ss.conn_category_dict = {"subordinator": 0, "coordinator": 1, "adverbial": 2}
     ss.conn_nt_position_dict = {"right": 0, "left": 1}
@@ -235,7 +238,7 @@ def load_reference_ps_arg_extractor():
     load_reference_modules()
     from aser.extract.discourse_parser import PSArgumentExtractor
 
-    base = Path("/root/reference/aser/extract/discourse")
+    base = REFERENCE_ROOT / "aser/extract/discourse"
     ps = PSArgumentExtractor.__new__(PSArgumentExtractor)
     ps.verb_pos = set(["VB", "VBD", "VBG", "VBN", "VBP", "VBZ"])
     ps.conn_category_dict = {"subordinator": 0, "coordinator": 1, "adverbial": 2}
@@ -273,7 +276,7 @@ def load_reference_argpos_classifier():
     load_reference_modules()
     from aser.extract.discourse_parser import ArgumentPositionClassifier
 
-    base = Path("/root/reference/aser/extract/discourse/argpos_feats")
+    base = REFERENCE_ROOT / "aser/extract/discourse/argpos_feats"
     ac = ArgumentPositionClassifier.__new__(ArgumentPositionClassifier)
     ac.conn_part_dict = {"start": 0, "middle": 1, "end": 2}
     for feat in ("conn", "cpos", "prev1", "prev1pos", "prev1_conn",
@@ -303,7 +306,7 @@ def load_reference_entity_linker():
     mention universe (kernel mentions are PTB tokens joined by ' ')."""
     import types
 
-    src_path = Path("/root/reference/aser/extract/entity_linker.py")
+    src_path = REFERENCE_ROOT / "aser/extract/entity_linker.py"
 
     class _Stopwords:
         @staticmethod

@@ -10,13 +10,19 @@ import pytest
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO / "scripts"))
 
+from validate_helpers import REFERENCE_ROOT  # noqa: E402
+
+needs_reference = pytest.mark.skipif(
+    not (REFERENCE_ROOT / "aser").is_dir(),
+    reason=f"reference checkout {REFERENCE_ROOT / 'aser'} is absent")
+
 
 def _load_reference_conceptualizer(probase_index, topk=3):
     from validate_helpers import _stub_module
 
     _stub_module("tqdm", tqdm=lambda it, **kw: it)
-    if "/root/reference" not in sys.path:
-        sys.path.insert(0, "/root/reference")
+    if str(REFERENCE_ROOT) not in sys.path:
+        sys.path.insert(0, str(REFERENCE_ROOT))
     from aser.conceptualize.aser_conceptualizer import (
         ProbaseASERConceptualizer, SeedRuleASERConceptualizer)
 
@@ -50,6 +56,7 @@ def _corpus_triples(n_convs=60):
     return out
 
 
+@needs_reference
 def test_exact_conceptualizer_matches_reference_class():
     from aser_spark.pipeline.concepts import probase_rows
     from aser_spark.pipeline.concepts_exact import (build_probase_index,
@@ -77,6 +84,7 @@ def test_exact_conceptualizer_matches_reference_class():
     assert n_multi > 100
 
 
+@needs_reference
 def test_exact_conceptualizer_heap_cut_and_order():
     """A 4-noun eventuality overflows the 27-slot heap: the reference keeps
     the 27 best (score, words) and emits them score-descending."""
@@ -129,6 +137,7 @@ def test_probase_concepts_exact_spark_matches_pure(spark):
     assert ("e2", 0, "__PERSON__0 sleep", 1.0) in got
 
 
+@needs_reference
 def test_exact_conceptualizer_edge_cases():
     """Pure-python edge semantics pinned against the reference class:
     repeated instance words substitute at ALL positions; seed-concept and

@@ -17,9 +17,14 @@ import pytest
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO / "scripts"))
 
-from validate_helpers import load_reference_entity_linker  # noqa: E402
+from validate_helpers import (REFERENCE_ROOT,  # noqa: E402
+                              load_reference_entity_linker)
 
 from aser_spark.pipeline.entities import _STOPWORDS  # noqa: E402
+
+if not (REFERENCE_ROOT / "aser").is_dir():
+    pytest.skip(f"reference checkout {REFERENCE_ROOT / 'aser'} is absent",
+                allow_module_level=True)
 
 REF = load_reference_entity_linker()
 STOP = set(_STOPWORDS)

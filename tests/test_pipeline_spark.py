@@ -1,5 +1,5 @@
-"""Spark-level pipeline tests: invariants, operator composition parity,
-checkpoint/resume, salted aggregation correctness."""
+"""Spark-level pipeline tests: invariants, fused-extraction parity with
+the kernel, checkpoint/resume, salted aggregation correctness."""
 
 import shutil
 from collections import Counter
@@ -73,19 +73,6 @@ def test_fused_extraction_matches_kernel(spark, transcripts, kernel_expected):
     got_rel = Counter(
         (r.hid, r.tid, r.sense)
         for r in inst.filter("kind = 'edge'").select("hid", "tid", "sense").collect())
-    assert got_ev == ev_exp
-    assert got_rel == rel_exp
-
-
-def test_composed_operators_match_fused(spark, transcripts, kernel_expected):
-    from aser_spark.pipeline import (extract_eventualities, extract_relations,
-                                     parse_transcripts)
-
-    ev_exp, rel_exp, _ = kernel_expected
-    parsed = parse_transcripts(transcripts).cache()
-    got_ev = Counter(r.eid for r in extract_eventualities(parsed).select("eid").collect())
-    got_rel = Counter((r.hid, r.tid, r.sense)
-                      for r in extract_relations(parsed).collect())
     assert got_ev == ev_exp
     assert got_rel == rel_exp
 
@@ -224,34 +211,28 @@ def test_merge_into_kg_matches_full_build(spark, transcripts):
     assert rows(id_edges) == rows(full_edges)
 
 
-@pytest.mark.parametrize("mode", ["seed", "discourse"])
-def test_memo_generation_and_release_identical_rows(spark, transcripts, mode):
-    """The r7 worker-memory controls are pure memory management: bumping
-    memo_generation (same-mode evict at task start) and running the
-    release_extraction_memory flush job between runs must leave the
-    extraction output byte-identical."""
-    from aser_spark.pipeline.extract import (_sentence_cache,
-                                             extract_graph_instances,
-                                             release_extraction_memory)
+def test_alternating_modes_on_reused_workers_identical_rows(spark):
+    """Seed -> discourse -> seed -> discourse extraction over the same
+    conversations in one session: every run of a mode returns that mode's
+    first-run rows, although the later runs go to workers that already ran
+    both modes.  Sentence memos live for one task, so a worker carries no
+    memo state from one run into the next."""
+    from aser_spark.datagen import transcripts_df
+    from aser_spark.pipeline import extract_graph_instances
 
-    # populate a DRIVER-side memo first: the flush closure must not
-    # capture _SENT_MEMOS by value (unpicklable lru_cache state) — the
-    # regression only surfaced when the driver process also held memos
-    _sentence_cache(mode)("the dog sees the cat.")
+    t = transcripts_df(spark, 120, seed=7).cache()
 
-    t = transcripts.limit(120)
-
-    def rows(**kw):
+    def rows(mode):
         return sorted(map(repr,
-                          extract_graph_instances(t, mode=mode, **kw).collect()))
+                          extract_graph_instances(t, mode=mode).collect()))
 
-    base = rows()
-    gen1 = rows(memo_generation=1)
-    release_extraction_memory(spark)
-    gen2 = rows(memo_generation=2)
-    # driver-side flush path too (covers the spark=None branch)
-    release_extraction_memory()
-    assert base == gen1 == gen2
+    first = {}
+    for mode in ("seed", "discourse", "seed", "discourse"):
+        got = rows(mode)
+        assert got, mode
+        assert first.setdefault(mode, got) == got, mode
+    assert first["seed"] != first["discourse"]
+    t.unpersist()
 
 
 def test_merge_lineage_matches_full_build(spark, transcripts):
@@ -557,17 +538,20 @@ def test_link_entities_coref_merges_candidate_pools(spark):
 
 def test_workers_fork_from_preloading_daemon(spark):
     """Python workers come from aser_spark.worker_daemon: the extraction
-    stack is imported before a task starts, and no zipimporter is left in
-    the path importer cache for the per-task invalidate_caches to re-read
-    its whole archive."""
+    stack is imported and frozen out of the cyclic GC before a task
+    starts, and no zipimporter is left in the path importer cache for the
+    per-task invalidate_caches to re-read its whole archive."""
     def probe(batches):
+        import gc
         import sys
         import zipimport
 
         state = {"kernel": "aser_spark.kernel" in sys.modules,
                  "pyarrow": "pyarrow" in sys.modules,
                  "zipimporters": sum(isinstance(f, zipimport.zipimporter)
-                                     for f in sys.path_importer_cache.values())}
+                                     for f in sys.path_importer_cache.values()),
+                 "frozen": gc.get_freeze_count(),
+                 "threshold": list(gc.get_threshold())}
         import pyarrow as pa
 
         for _ in batches:
@@ -575,12 +559,16 @@ def test_workers_fork_from_preloading_daemon(spark):
         yield pa.RecordBatch.from_pylist([state])
 
     df = spark.range(8, numPartitions=8).mapInArrow(
-        probe, "kernel boolean, pyarrow boolean, zipimporters long")
+        probe, "kernel boolean, pyarrow boolean, zipimporters long, "
+               "frozen long, threshold array<long>")
     for _ in range(2):  # the second job runs in workers that already ran one
         rows = df.collect()
         assert len(rows) == 8
         assert all(r.kernel and r.pyarrow for r in rows), rows
         assert all(r.zipimporters == 0 for r in rows), rows
+        # the daemon froze the preloaded modules before forking
+        assert all(r.frozen > 0 for r in rows), rows
+        assert all(r.threshold == [50000, 25, 50] for r in rows), rows
 
 
 _CWD_SCRIPT = """
@@ -605,15 +593,20 @@ finally:
 
 
 def test_get_spark_workers_import_package_from_any_cwd(tmp_path):
-    """A session from get_spark, started in a directory that does not hold
-    the package and with PYTHONPATH unset, still runs a plain pandas UDF
-    and the fused extraction: the package's directory reaches the workers
-    through spark.executorEnv.PYTHONPATH."""
+    """A session from get_spark, started with PYTHONPATH unset in a
+    directory that holds a decoy ``aser_spark`` package, still runs a plain
+    pandas UDF and the fused extraction: the package's directory reaches
+    the workers through spark.executorEnv.PYTHONPATH, and
+    PYTHONSAFEPATH keeps the working directory off their sys.path."""
     import os
     import subprocess
     import sys
     from pathlib import Path
 
+    decoy = tmp_path / "aser_spark"
+    decoy.mkdir()
+    (decoy / "__init__.py").write_text(
+        'raise ImportError("decoy aser_spark imported from the cwd")\n')
     repo = Path(__file__).resolve().parent.parent
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     proc = subprocess.run([sys.executable, "-c", _CWD_SCRIPT, str(repo)],
