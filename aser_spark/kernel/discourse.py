@@ -817,125 +817,20 @@ def classify_senses(doc_parsed, connectives, syntax_trees, models):
     return connectives
 
 
-def _flank(filtered, s, i, step, k=10):  # k = _MAX_ATTEMPT (defined below)
-    """Up to ``k`` raw token steps from (sent ``s``, token ``i``) in
-    direction ``step``, as (sent_delta, token, pos) triples — the exact
-    stepping _adjacent_index uses, WITHOUT any skip set.  Every
-    cross-boundary feature walk is capped at _MAX_ATTEMPT raw steps, so
-    these triples (plus the two sentences' own text) fully determine
-    every feature a sentence-``s`` walk can observe outside [s-1, s]."""
-    out = []
-    ds, di = s, i
-    for _ in range(k):
-        if step < 0:
-            if di - 1 >= 0:
-                di -= 1
-            elif ds - 1 >= 0:
-                ds -= 1
-                di = len(filtered[ds]["tokens"]) - 1
-                if di < 0:
-                    continue
-            else:
-                break
-        else:
-            if di + 1 < len(filtered[ds]["tokens"]):
-                di += 1
-            elif ds + 1 < len(filtered):
-                ds += 1
-                di = 0
-                if not filtered[ds]["tokens"]:
-                    continue
-            else:
-                break
-        out.append((ds - s, filtered[ds]["tokens"][di],
-                    filtered[ds]["pos_tags"][di]))
-    return tuple(out)
-
-
-def _boundary_ctx(filtered, i, step):
-    """The ONE (token, pos) a D2 feature walk can observe beyond sentence
-    ``i`` in direction ``step`` — exactly ``_adjacent_token``'s first move
-    across the boundary (it returns after a single step); None at the
-    document edge.  Every filtered sentence has tokens (an empty one is
-    ``EMPTY_SENT_PARSED``); a neighbour without any raises ValueError, as
-    ``_adjacent_token`` would fail on it, instead of keying the D2 memo
-    like the document edge."""
-    j = i + step
-    if j < 0 or j >= len(filtered):
-        return None
-    sp = filtered[j]
-    if not sp["tokens"]:
-        raise ValueError(f"filtered sentence {j} has no tokens")
-    k = -1 if step < 0 else 0
-    return (sp["tokens"][k], sp["pos_tags"][k])
-
-
-def _d2_accepted(filtered, i, tree, models, cands):
-    """Classifier-accepted connective spans for sentence ``i`` of the
-    relation pass, memoized per process in ``_D2_MEMO``.
-
-    The D2 connective features are a pure function of (the sentence's own
-    tokens/pos, ONE boundary token each way, the sentence's constituency
-    tree) — and the tree is itself a deterministic function of the
-    sentence text for every pipeline caller (the parse memo), so
-    ``(text, prev_ctx, next_ctx, tree-is-None)`` exactly keys the accepted
-    set.
-
-    Precondition: ``tree`` must be a pure function of the sentence text —
-    the one ``aser_spark.nlp.parse_sentence`` builds for it.  The key holds
-    the text, not the tree, so a caller that passes an externally built
-    tree (e.g. a reference-parsed corpus) for a text already seen gets the
-    other tree's memoized accepted set.  Such callers are unsupported.  Zipf-hot sentences previously re-featurized + re-classified
-    every candidate on every occurrence in every conversation; this is
-    the relation-pass sibling of the always-on ``_CAND_MEMO`` (single-
-    sentence keys — high hit rate, trivial key build — unlike the
-    measured-slower full pair memo).  Values are immutable tuples; the
-    caller builds fresh dicts, so downstream mutation (arg spans) cannot
-    leak into the memo."""
-    sp = filtered[i]
-    key = (sp["text"], _boundary_ctx(filtered, i, -1),
-           _boundary_ctx(filtered, i, +1),
-           tree is None or tree.tree is None)
-    hit = _D2_MEMO.get(key)
-    if hit is None:
-        hit = tuple(
-            (c["connective"], tuple(c["indices"])) for c in cands
-            if models.is_connective(connective_feature_strings(
-                filtered, i, c["indices"], tree)))
-        with _PAIR_MEMO_LOCK:  # atomic evict+insert (daemon threads)
-            if len(_D2_MEMO) >= _D2_MEMO_MAX:
-                _D2_MEMO.clear()
-            _D2_MEMO[key] = hit
-    return hit
-
-
-_D2_MEMO: dict = {}
-_D2_MEMO_MAX = 1 << 16
-
-
 def _sentence_connective_rows(filtered, sentences, para_eventualities,
-                              syntax_trees, i, models, method, threshold,
-                              cands_raw=None):
+                              syntax_trees, i, models, method, threshold):
     """All relation rows whose connective lives in sentence ``i`` —
     the D2→D3→D4/D5→D6→matching chain restricted to that sentence's
     candidates.  Per-connective independence of every stage makes this
-    exactly the per-``i`` slice of the original doc-wide pass.
-    ``cands_raw`` lets the caller reuse an already-extracted candidate
-    list (the sort here canonicalizes order either way).
-
-    Precondition: ``syntax_trees[i]`` must be a pure function of sentence
-    ``i``'s text (the tree ``aser_spark.nlp.parse_sentence`` builds);
-    ``_d2_accepted`` memoizes on the text.  Externally built trees are
-    unsupported."""
-    if cands_raw is None:
-        cands_raw = extract_connective_candidates(filtered[i]["tokens"])
-    cands = sorted(cands_raw, key=lambda x: x["connective"])
-    if not cands:
-        return []
+    exactly the per-``i`` slice of the original doc-wide pass."""
+    cands = sorted(extract_connective_candidates(filtered[i]["tokens"]),
+                   key=lambda x: x["connective"])
     connectives = [
-        {"connective": conn, "indices": list(idxs), "sent_idx": i}
-        for conn, idxs in _d2_accepted(filtered, i, syntax_trees[i],
-                                       models, cands)
+        {"connective": c["connective"], "indices": list(c["indices"]),
+         "sent_idx": i}
+        for c in cands
+        if models.is_connective(connective_feature_strings(
+            filtered, i, c["indices"], syntax_trees[i]))
     ]
     ss_conns, ps_conns = [], []
     for c in connectives:
@@ -972,50 +867,6 @@ def _sentence_connective_rows(filtered, sentences, para_eventualities,
             for e2 in e2s:
                 rows.append((e1["eid"], e2["eid"], sense, cnt))
     return rows
-
-
-# (prev_sentence, sentence) pair memo for the relation pass.  The r4
-# profile showed warm-memo discourse cost dominated by this pass because
-# PS features re-read the full previous sentence for every occurrence of
-# a Zipf-hot sentence pair.  Key = both sentences' text + eventuality ids
-# (evs are f(text, separators), so eids pin the separator context) + the
-# raw _MAX_ATTEMPT-token flanks crossing the pair's outer boundaries (the
-# only out-of-pair state any feature walk can observe) + whether the
-# connective sentence's predecessor was eventuality-empty (EMPTY_SENT
-# replacement changes D5's clause source).  Rows reference content-hashed
-# eids only, so cached values are position- and paragraph-portable.
-import os as _os
-import threading as _threading
-
-_PAIR_MEMO: dict = {}
-_PAIR_MEMO_MAX = 1 << 16
-# text -> connective-candidate list (pure function of tokens; entries are
-# read-only downstream).  Unlike the pair memo this is ALWAYS on: keys are
-# single sentences (high hit rate under Zipf even across conversations)
-# and the value build is the scan itself, so there is no lose regime.
-_CAND_MEMO: dict = {}
-_CAND_MEMO_MAX = 1 << 16
-# Guards insert/eviction across the serving daemon's handler threads (the
-# only regime with the memo ON + concurrency).  Values are write-once and
-# immutable, so unlocked `get` is safe; the lock keeps the
-# clear-when-full / set pair atomic so one thread's eviction can't race
-# another's insert into a dict it believes has room.
-_PAIR_MEMO_LOCK = _threading.Lock()
-# DEFAULT OFF: measured on the Spark batch path (5k convs, local[8],
-# 3 reps/arm) the memo is 15-26% SLOWER — pair diversity across 25k
-# conversations plus task-to-worker drift defeats the cache while the
-# key build taxes every miss.  It wins 6x (3.4s -> 0.53s warm on the
-# 12k-turn profile) when the SAME paragraphs recur in one process —
-# the serving-daemon regime, which switches it on at startup.
-_PAIR_MEMO_ON = _os.environ.get("ASER_PAIR_MEMO", "0") != "0"
-
-
-def set_pair_memo(on: bool) -> None:
-    """Opt the current process in/out of the relation-pass pair memo."""
-    global _PAIR_MEMO_ON
-    _PAIR_MEMO_ON = bool(on)
-    if not on:
-        _PAIR_MEMO.clear()
 
 
 def extract_paragraph_relations_discourse(sentences, para_eventualities,
@@ -1063,53 +914,11 @@ def extract_paragraph_relations_discourse(sentences, para_eventualities,
         else:
             filtered.append(EMPTY_SENT_PARSED)
 
-    # dep-method reads raw parses; ASER_PAIR_MEMO=0 is the A/B control
-    memoizable = _PAIR_MEMO_ON and method.lower() != "discourse"
     for i in range(start, stop):
-        sp = filtered[i]
-        if not sp["tokens"]:
-            continue
-        # candidate scan is a pure function of the token list; Zipf-hot
-        # sentences recur, so memo by token tuple (consumers never mutate
-        # the candidate dicts — _sentence_connective_rows copies fields out)
-        ck = tuple(sp["tokens"])
-        cands_raw = _CAND_MEMO.get(ck)
-        if cands_raw is None:
-            cands_raw = extract_connective_candidates(sp["tokens"])
-            with _PAIR_MEMO_LOCK:  # atomic evict+insert (daemon threads)
-                if len(_CAND_MEMO) >= _CAND_MEMO_MAX:
-                    _CAND_MEMO.clear()
-                _CAND_MEMO[ck] = cands_raw
-        if not cands_raw:
-            continue  # no connective -> no rows; skip key build entirely
-        if not memoizable:
+        if filtered[i]["tokens"]:
             rows.extend(_sentence_connective_rows(
                 filtered, sentences, para_eventualities, syntax_trees, i,
-                models, method, threshold, cands_raw=cands_raw))
-            continue
-        prev_real = sentences[i - 1]["text"] if i > 0 else ""
-        prev_empty = i > 0 and filtered[i - 1] is EMPTY_SENT_PARSED
-        key = (
-            sp["text"],
-            tuple(e["eid"] for e in para_eventualities[i]),
-            prev_real,
-            tuple(e["eid"] for e in para_eventualities[i - 1]) if i else (),
-            prev_empty,
-            _flank(filtered, i - 1 if i else 0, 0, -1),
-            _flank(filtered, i, len(sp["tokens"]) - 1, +1),
-            method,
-            threshold,
-        )
-        hit = _PAIR_MEMO.get(key)
-        if hit is None:
-            hit = _sentence_connective_rows(
-                filtered, sentences, para_eventualities, syntax_trees, i,
-                models, method, threshold, cands_raw=cands_raw)
-            with _PAIR_MEMO_LOCK:
-                if len(_PAIR_MEMO) >= _PAIR_MEMO_MAX:
-                    _PAIR_MEMO.clear()
-                _PAIR_MEMO[key] = hit
-        rows.extend(hit)
+                models, method, threshold))
     return rows
 
 
@@ -1636,16 +1445,9 @@ def sentence_connective_separators(tokens, pos_tags, syntax_tree,
                     "lemmas": [next_ctx[0]], "dependencies": []})
 
     models = load_discourse_models()
-    ck = tuple(tokens)
-    cands = _CAND_MEMO.get(ck)
-    if cands is None:
-        cands = extract_connective_candidates(tokens)
-        with _PAIR_MEMO_LOCK:  # atomic evict+insert (daemon threads)
-            if len(_CAND_MEMO) >= _CAND_MEMO_MAX:
-                _CAND_MEMO.clear()
-            _CAND_MEMO[ck] = cands
     sep = set()
-    for c in sorted(cands, key=lambda x: x["connective"]):
+    for c in sorted(extract_connective_candidates(tokens),
+                    key=lambda x: x["connective"]):
         strings = connective_feature_strings(doc, sent_idx, c["indices"],
                                              syntax_tree)
         if models.is_connective(strings):

@@ -25,7 +25,8 @@ from ..schemas import INSTANCE_SCHEMA
 
 
 def _sentence_cache(mode: str = "seed"):
-    """A fresh memo of sentence -> (parsed, eventualities).
+    """A fresh memo of sentence -> (parsed, eventualities, syntax tree);
+    the tree is None in seed mode, which never builds one.
 
     ``mode='discourse'`` runs the v2.0 path instead: connective candidate
     scan -> clause split (constituency SBAR + separators) -> per-clause
@@ -101,7 +102,7 @@ def _sentence_cache(mode: str = "seed"):
         evs = extract_sentence_eventualities(
             p["tokens"], p["lemmas"], p["pos_tags"], p["dependencies"],
             ners=p.get("ners"), mentions=p.get("mentions"))
-        return p, evs
+        return p, evs, None
 
     return one
 
@@ -237,7 +238,7 @@ def conversation_instance_rows(conv_id, turns, memo=None, mode="seed",
                 res = memo(sent)
                 sentences.append(res[0])
                 para_evs.append(res[1])
-                trees.append(res[2] if len(res) > 2 else None)
+                trees.append(res[2])
                 keys.append((int(turn_idx), sent_idx))
     if emit_turns is None:
         s_lo, s_hi = 0, len(keys)
@@ -481,7 +482,7 @@ def turn_coverage_rows(conv_id, turn_idx, text, memo=None):
         memo = _sentence_cache("seed")
     rows = []
     for sent_idx, sent in enumerate(split_sentences(text)):
-        p, evs = memo(sent)[:2]
+        p, evs, _ = memo(sent)
         rows.append((conv_id, int(turn_idx), sent_idx, len(p["tokens"]),
                      " ".join(p["pos_tags"]), len(evs), bool(evs)))
     return rows

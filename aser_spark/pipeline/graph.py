@@ -4,6 +4,8 @@ and partitioned table writes (SURVEY.md F6/J4/U1-U3, §3.1 steps 5-6).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
 from .aggregate import (aggregate_edges, aggregate_nodes, build_lineage,
@@ -85,30 +87,10 @@ def edges_wide(edges: DataFrame) -> DataFrame:
 
 def merge_kgs(node_dfs: list, edge_dfs: list):
     """U1 multi-KG union-merge (examples/database/merge_kgs.py:33-60):
-    union + re-aggregate, frequencies/weights summed."""
-    nodes = None
-    for df in node_dfs:
-        nodes = df if nodes is None else nodes.unionByName(df)
-    edges = None
-    for df in edge_dfs:
-        edges = df if edges is None else edges.unionByName(df)
-    merged_nodes = (
-        nodes.groupBy("eid")
-        .agg(
-            F.any_value("pattern").alias("pattern"),
-            F.any_value("words").alias("words"),
-            F.any_value("pos_tags").alias("pos_tags"),
-            F.any_value("skeleton_words").alias("skeleton_words"),
-            F.any_value("verbs").alias("verbs"),
-            F.sum("frequency").alias("frequency"),
-        )
-    )
-    merged_edges = (
-        edges.groupBy("rid", "hid", "tid", "sense")
-        .agg(F.sum("weight").alias("weight"))
-        .select("rid", "hid", "tid", "sense", "weight")
-    )
-    return merged_nodes, merged_edges
+    union + re-aggregate, frequencies/weights summed and rid recomputed."""
+    nodes = reduce(DataFrame.unionByName, node_dfs)
+    edges = reduce(DataFrame.unionByName, edge_dfs)
+    return aggregate_nodes(nodes), aggregate_edges(edges)
 
 
 def merge_into_kg(nodes: DataFrame, edges: DataFrame,

@@ -12,10 +12,13 @@ same eleven command shapes —
             fetch_related_eventualities, exact_match_concept,
             exact_match_concept_relation, fetch_related_concepts
 
-Compute commands run the SAME memoized kernel the Spark pipeline uses
-(pipeline/extract.py:_sentence_cache — seed or discourse mode) and the
-reference-exact heap-beam conceptualizer; lookups hit the reference-schema
-SQLite KG (serving_sqlite.py) through one connection per handler thread.
+Compute commands run the SAME kernel the Spark pipeline uses: sentences
+go through one ``pipeline/extract.py:_sentence_cache`` memo (seed or
+discourse mode) and relation rows are memoized per request paragraph, so
+a client that re-sends a paragraph is served from memory.  Concept
+commands run the reference-exact heap-beam conceptualizer; lookups hit
+the reference-schema SQLite KG (serving_sqlite.py) through one
+connection per handler thread.
 The reference's worker pool + two-port ZMQ fanout exists to amortize
 CoreNLP round-trips; here parsing is in-process and microsecond-scale, so
 a thread-per-connection loop serves the same concurrency need without a
@@ -61,28 +64,23 @@ def _jsonable(obj):
 class _KernelOps:
     """Compute-command implementations, shared by every handler thread.
 
-    The server owns one long-lived sentence memo, built once here by the
-    same ``_sentence_cache`` factory whose memos a Spark extraction task
-    builds and drops per task — identical kernel code path, but warm for
-    the life of the server."""
+    The server keeps two bounded ``lru_cache`` memos for its whole life:
+    a sentence memo from the same ``_sentence_cache`` factory whose memos a
+    Spark extraction task builds and drops per task, and a paragraph memo
+    of relation rows keyed by the request text."""
 
     def __init__(self, mode: str = "seed", concept_topk: int = 5):
+        from functools import lru_cache
+
         from .pipeline.concepts import probase_rows
         from .pipeline.concepts_exact import build_probase_index
         from .pipeline.extract import _sentence_cache
 
         self.mode = mode
         self.memo = _sentence_cache(mode)
+        self._relations_of = lru_cache(maxsize=4096)(self._relations)
         self.concept_topk = concept_topk
         self.probase_index = build_probase_index(probase_rows())
-        if mode == "discourse":
-            # serving repeatedly re-extracts the same client paragraphs in
-            # ONE long-lived process — exactly the regime where the
-            # (prev_sentence, sentence) relation-pass memo wins 6x
-            # (kernel/discourse.py; default-off in the Spark batch path)
-            from .kernel.discourse import set_pair_memo
-
-            set_pair_memo(True)
 
     def parse_text(self, text: str):
         from .nlp import parse_text
@@ -94,17 +92,18 @@ class _KernelOps:
 
         sentences, para_evs, trees = [], [], []
         for sent in split_sentences(text):
-            res = self.memo(sent)
-            sentences.append(res[0])
-            para_evs.append(res[1])
-            trees.append(res[2] if len(res) > 2 else None)
+            p, evs, tree = self.memo(sent)
+            sentences.append(p)
+            para_evs.append(evs)
+            trees.append(tree)
         return sentences, para_evs, trees
 
     def extract_eventualities(self, text: str):
         _, para_evs, _ = self._para(text)
         return _jsonable(para_evs)
 
-    def _relations(self, sentences, para_evs, trees):
+    def _relations(self, text: str):
+        sentences, para_evs, trees = self._para(text)
         if self.mode == "discourse":
             from .kernel.discourse import (
                 extract_paragraph_relations_discourse)
@@ -116,14 +115,12 @@ class _KernelOps:
         return extract_paragraph_relations(sentences, para_evs)
 
     def extract_relations(self, text: str):
-        sentences, para_evs, trees = self._para(text)
-        return _jsonable(self._relations(sentences, para_evs, trees))
+        return _jsonable(self._relations_of(text))
 
     def extract_eventualities_and_relations(self, text: str):
-        sentences, para_evs, trees = self._para(text)
+        _, para_evs, _ = self._para(text)
         return {"eventualities": _jsonable(para_evs),
-                "relations": _jsonable(
-                    self._relations(sentences, para_evs, trees))}
+                "relations": _jsonable(self._relations_of(text))}
 
     def conceptualize_eventuality(self, arg: dict):
         from .pipeline.concepts_exact import exact_concept_rows

@@ -20,6 +20,14 @@ import pytest
 
 FIXTURE = Path(__file__).parent.parent / "fixtures" / "golden_discourse_eventualities.jsonl"
 REL_FIXTURE = Path(__file__).parent.parent / "fixtures" / "golden_discourse_relations.jsonl"
+HELDOUT = Path(__file__).parent.parent / "fixtures" / "heldout_prose.jsonl"
+
+
+def heldout_paragraphs(n=30):
+    """The first ``n`` held-out paragraphs, each one text."""
+    with open(HELDOUT) as f:
+        return [" ".join(json.loads(line)["doc_texts"])
+                for line, _ in zip(f, range(n))]
 
 
 def _parse_doc(texts):
@@ -375,19 +383,30 @@ def test_compiled_model_rejects_coefficients_of_another_width():
                        families, vocab)
 
 
-def test_boundary_ctx_rejects_empty_token_neighbour():
-    """The D2 memo keys on the boundary token; a neighbour without tokens
-    must fail like the unmemoized feature walk, not alias the document
-    edge."""
-    from aser_spark.kernel.discourse import EMPTY_SENT_PARSED, _boundary_ctx
+def test_kernel_keeps_no_state_between_calls():
+    """The relation pass and the separator decision compute every time:
+    running them twice over held-out paragraphs leaves every dict, list
+    and set of the kernel module at the size it had before."""
+    from aser_spark.kernel import discourse
+    from aser_spark.kernel.discourse_models import load_discourse_models
+    from aser_spark.nlp import split_sentences
+    from aser_spark.pipeline.extract import _sentence_cache
 
-    sent = {"tokens": ["it", "rained"], "pos_tags": ["PRP", "VBD"]}
-    empty = {"tokens": [], "pos_tags": []}
-    assert _boundary_ctx([sent], 0, -1) is None
-    assert _boundary_ctx([sent, EMPTY_SENT_PARSED], 0, +1) == (
-        EMPTY_SENT_PARSED["tokens"][0], EMPTY_SENT_PARSED["pos_tags"][0])
-    assert _boundary_ctx([sent, sent], 1, -1) == ("rained", "VBD")
-    with pytest.raises(ValueError, match="sentence 0 has no tokens"):
-        _boundary_ctx([empty, sent], 1, -1)
-    with pytest.raises(ValueError, match="sentence 1 has no tokens"):
-        _boundary_ctx([sent, empty], 0, +1)
+    load_discourse_models()
+
+    def sizes():
+        return {k: len(v) for k, v in vars(discourse).items()
+                if isinstance(v, (dict, list, set))}
+
+    before = sizes()
+    memo = _sentence_cache("discourse")
+    paras = [[memo(s) for s in split_sentences(p)]
+             for p in heldout_paragraphs()]
+    for _ in range(2):
+        for para in paras:
+            sents, evs, trees = (list(x) for x in zip(*para))
+            discourse.extract_paragraph_relations_discourse(sents, evs, trees)
+            for p, _, tree in para:
+                discourse.sentence_connective_separators(
+                    p["tokens"], p["pos_tags"], tree)
+    assert sizes() == before

@@ -98,27 +98,6 @@ def test_heldout_discourse_weight_groups(paragraphs):
         assert abs(wt * inv - 1.0) < 1e-6, f"non-unit-fraction weight {wt}"
 
 
-def test_pair_memo_rows_identical(paragraphs):
-    """The (prev_sentence, sentence) relation-pass pair memo (serving
-    regime) must be row-identical to the memo-off batch path on
-    arbitrary held-out text — run twice with memo on so the second pass
-    exercises cache HITS."""
-    from aser_spark.kernel.discourse import _PAIR_MEMO, set_pair_memo
-
-    sample = paragraphs[:30]
-    try:
-        set_pair_memo(False)
-        off = _all_rows(sample, "discourse")
-        set_pair_memo(True)
-        _PAIR_MEMO.clear()
-        on_cold = _all_rows(sample, "discourse")
-        on_warm = _all_rows(sample, "discourse")
-        assert _PAIR_MEMO, "memo never populated"
-    finally:
-        set_pair_memo(False)
-    assert off == on_cold == on_warm
-
-
 def test_heldout_coverage_floor(corpus, paragraphs):
     """Strict eventuality coverage over in-policy sentences; the taxonomy
     of the zeros (imperative no-subject vs reference rule-veto) is
@@ -137,7 +116,7 @@ def test_heldout_coverage_floor(corpus, paragraphs):
                 if any(t in CLAUSE_SKIP_WORDS for t in tokenize(sent)):
                     continue
                 n_in_policy += 1
-                p, evs = memo(sent)[:2]
+                p, evs, _ = memo(sent)
                 if evs:
                     n_cov += 1
                 if any(p["pos_tags"][g].startswith("VB") or lab == "cop"

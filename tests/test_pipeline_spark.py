@@ -216,15 +216,16 @@ def test_alternating_modes_on_reused_workers_identical_rows(spark):
     conversations in one session: every run of a mode returns that mode's
     first-run rows, although the later runs go to workers that already ran
     both modes.  Sentence memos live for one task, so a worker carries no
-    memo state from one run into the next."""
+    memo state from one run into the next.  The rows also do not depend on
+    the partition count or on skipping the shuffle for pre-grouped input."""
     from aser_spark.datagen import transcripts_df
     from aser_spark.pipeline import extract_graph_instances
 
     t = transcripts_df(spark, 120, seed=7).cache()
 
-    def rows(mode):
-        return sorted(map(repr,
-                          extract_graph_instances(t, mode=mode).collect()))
+    def rows(mode, **kw):
+        return sorted(map(repr, extract_graph_instances(
+            t, mode=mode, **kw).collect()))
 
     first = {}
     for mode in ("seed", "discourse", "seed", "discourse"):
@@ -232,6 +233,10 @@ def test_alternating_modes_on_reused_workers_identical_rows(spark):
         assert got, mode
         assert first.setdefault(mode, got) == got, mode
     assert first["seed"] != first["discourse"]
+    for mode in first:
+        for kw in ({"num_partitions": 1}, {"num_partitions": 7},
+                   {"pre_grouped": True}):
+            assert rows(mode, **kw) == first[mode], (mode, kw)
     t.unpersist()
 
 
@@ -645,3 +650,45 @@ def test_extraction_fails_on_duplicate_turn_key(spark, kwargs):
         "conv_id string, turn_idx int, text string")
     with pytest.raises(Exception, match="conversation 'c0': turn_idx 1 follows turn_idx 1"):
         extract_graph_instances(df, **kwargs).count()
+
+
+# one 10k-token sentence between two ordinary ones
+_GIANT_TURN = "i ate an apple. " + " ".join(["word"] * 10_000) + ". she left."
+_MALFORMED_TURNS = [
+    ("m0", 0, None), ("m0", 1, ""), ("m0", 2, " \t\n "),
+    ("m0", 3, "I ate an apple because I was hungry."),
+    ("m1", 0, "he\x00 slept.\x07 she left early."),
+    ("m1", 1, "we\u200b ran home\u200d because\ufeff it rained."),
+    ("m2", 0, "I love pizza \U0001F355. we sang \U0001D518 songs today."),
+    ("m2", 1, "\U0001F600\U0001F600"),
+    ("m3", 2, "the dog barked."), ("m3", 9, None),
+    ("m3", 40, "the cat slept because it was tired."),
+]
+
+
+@pytest.mark.parametrize("mode", ["seed", "discourse"])
+def test_malformed_turns_match_kernel(spark, mode):
+    """Null, empty and whitespace-only turns, control and zero-width
+    characters, non-BMP characters and gapped turn_idx: the Spark build
+    succeeds, its rows equal the pure kernel's on the same turns, and a
+    turn without text emits no node.  Seed mode also gets a 10k-token
+    turn (a sentence that long costs minutes in discourse mode)."""
+    from aser_spark.pipeline import extract_graph_instances
+    from aser_spark.pipeline.extract import conversation_instance_rows
+
+    turns = list(_MALFORMED_TURNS)
+    if mode == "seed":
+        turns.append(("m4", 0, _GIANT_TURN))
+    df = spark.createDataFrame(turns,
+                               "conv_id string, turn_idx int, text string")
+    got = sorted(map(tuple, extract_graph_instances(df, mode=mode).collect()),
+                 key=repr)
+
+    want = []
+    for conv in sorted({c for c, _, _ in turns}):
+        want.extend(conversation_instance_rows(
+            conv, [(i, x) for c, i, x in turns if c == conv], mode=mode))
+    assert got == sorted(want, key=repr)
+    assert any(r[0] == "edge" for r in got)
+    blank = {(c, i) for c, i, x in turns if not (x or "").strip()}
+    assert not blank & {(r[1], r[2]) for r in got if r[0] == "node"}

@@ -49,6 +49,48 @@ def test_compute_commands_match_kernel():
                        for c in cons)
 
 
+def test_discourse_paragraph_memo_matches_kernel():
+    """Relation rows memoized per request text: a cold and a warm pass
+    over held-out paragraphs equal the kernel run from a fresh sentence
+    memo, and so do handler threads sharing one cold server's memos."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from aser_spark.kernel.discourse import (
+        extract_paragraph_relations_discourse)
+    from aser_spark.nlp import split_sentences
+    from aser_spark.pipeline.extract import _sentence_cache
+    from aser_spark.serving_net import _jsonable, _KernelOps
+    from tests.test_discourse_kernel import heldout_paragraphs
+
+    paras = heldout_paragraphs()
+    ops = _KernelOps("discourse")
+    cold = [ops.extract_relations(p) for p in paras]
+    warm = [ops.extract_relations(p) for p in paras]
+    assert ops._relations_of.cache_info().hits >= len(paras)
+
+    memo = _sentence_cache("discourse")
+    want = []
+    for p in paras:
+        sents, evs, trees = (list(x) for x in zip(*map(memo,
+                                                       split_sentences(p))))
+        want.append(_jsonable(
+            extract_paragraph_relations_discourse(sents, evs, trees)))
+    assert any(want)
+    assert cold == warm == want
+
+    shared = _KernelOps("discourse")
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            threaded = list(pool.map(shared.extract_relations, paras * 3,
+                                     timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert threaded == want * 3
+
+
 def test_lookup_commands_roundtrip(spark, tmp_path):
     from aser_spark.serving_net import NONE, ASERServingClient
     from aser_spark.serving_sqlite import export_kg_to_sqlite
