@@ -330,11 +330,8 @@ def extract_graph_instances(transcripts, num_partitions=None, pre_grouped=False,
     conversation stream sorts by turn_idx only), so the task that sees it
     fails with the ValueError of ``conversation_instance_rows``; on the
     ``pre_grouped`` path a conversation out of turn order fails the same
-    way.  Under the guard, duplicates take adjacent ranks, so one chunk
-    holds both as core or carried context — except with
-    ``context_turns=0``, where a pair split exactly at a chunk boundary
-    reaches no single task.  Deduplicate or re-index malformed corpora
-    first.
+    way.  Under the guard, the rank stage fails on a duplicate.
+    Deduplicate or re-index malformed corpora first.
     """
     from pyspark.sql import functions as F
 
@@ -410,9 +407,17 @@ def extract_graph_instances(transcripts, num_partitions=None, pre_grouped=False,
     rank_bucket = 4096
     bucket = F.floor(F.col("turn_idx") / rank_bucket)
     w_local = Window.partitionBy("conv_id", "_b").orderBy("turn_idx")
+    # a duplicate turn_idx takes adjacent ranks in one bucket: fail here, in
+    # a column the plan keeps, since with context_turns=0 a pair split at a
+    # chunk boundary reaches no single kernel task
+    prev = F.lag("turn_idx").over(w_local)
+    lrk = F.when(prev == F.col("turn_idx"), F.raise_error(F.format_string(
+        "conversation '%s': turn_idx %d follows turn_idx %d",
+        F.col("conv_id"), F.col("turn_idx"), prev))
+    ).otherwise(F.row_number().over(w_local) - 1)
     pre = (narrow
            .withColumn("_b", bucket)
-           .withColumn("_lrk", (F.row_number().over(w_local) - 1).cast("long")))
+           .withColumn("_lrk", lrk.cast("long")))
     w_off = (Window.partitionBy("conv_id").orderBy("_b")
              .rowsBetween(Window.unboundedPreceding, -1))
     # counts via map-side-combining hash agg over the 2-column projection

@@ -1,5 +1,5 @@
 """KG materialization: core filtering, dangling-edge semi-join, wide edges,
-and partitioned table writes (SURVEY.md F6/J4/U1-U3, §3.1 steps 5-6).
+and bucket-clustered table writes (SURVEY.md F6/J4/U1-U3, §3.1 steps 5-6).
 """
 
 from __future__ import annotations
@@ -107,12 +107,14 @@ def merge_into_kg(nodes: DataFrame, edges: DataFrame,
     payload columns are eid-functional, so ``coalesce(old, new)`` is exact —
     and only the additive measures (frequency / weight) combine.  This is
     the MERGE-INTO plan rather than union+re-aggregate: the big side is
-    joined on its own primary key, so with the KG stored bucketed by
-    eid/hid (write_graph_tables; Iceberg ``bucket(eid)`` in production) a
-    storage-partitioned join reads it WITHOUT a shuffle, and only the small
-    delta is exchanged.  Union+re-aggregate (merge_kgs) would re-shuffle
-    and re-hash the full accumulated KG — wrong at 100 TB where the KG is
-    large and each incremental batch is small.
+    joined on its own primary key, so with the KG stored as an Iceberg
+    ``bucket(eid)``/``bucket(hid)`` table and storage-partitioned join
+    enabled, it is read WITHOUT a shuffle and only the small delta is
+    exchanged (the parquet directory write_graph_tables leaves carries no
+    bucket spec, so Spark shuffles both sides).  Union+re-aggregate
+    (merge_kgs) would re-shuffle and re-hash the full accumulated KG —
+    wrong at 100 TB where the KG is large and each incremental batch is
+    small.
 
     Exactness invariant (driver-checked by the ``kg_incremental_merge``
     oracle query and pytest): ``merge_into_kg(build(A), instances(B)) ==
@@ -181,23 +183,21 @@ def merge_lineage(lineage: DataFrame, new_instances: DataFrame,
 
 def write_graph_tables(nodes: DataFrame, edges: DataFrame, lineage: DataFrame,
                        workdir: str, n_buckets: int = 64, mode: str = "overwrite"):
-    """Materialize partitioned graph tables.
+    """Materialize the graph tables as bucket-clustered parquet files.
 
-    Layout: hash-bucketed by node/edge key so point lookups and
-    co-partitioned joins prune files (the parquet stand-in for Iceberg
-    ``bucket(64, eid)`` partitioning; swap writeTo(...).partitionedBy(
-    bucket(...)) when an Iceberg catalog is configured).
+    Each row carries ``bucket = pmod(xxhash64(key), n_buckets)`` (int; key
+    = eid for nodes and lineage, hid for edges).  ``repartition(bucket)``
+    sends every bucket to one task and the sort makes it one contiguous run
+    in that task's file, so a bucket never spans two files and a filter on
+    ``bucket`` prunes by parquet min/max statistics.  There is no
+    directory per bucket: every file costs fixed CPU whatever its size, so
+    AQE sizes the file count to the data (one per table on a small KG, at
+    most ``n_buckets``).  With an Iceberg catalog, swap in
+    ``writeTo(...).partitionedBy(bucket(n_buckets, key))``.
     """
-    bucket = lambda c: F.pmod(F.xxhash64(c), F.lit(n_buckets)).alias("bucket")
-    (nodes.withColumn("bucket", bucket("eid"))
-          .repartition("bucket")
-          .write.mode(mode).partitionBy("bucket")
-          .parquet(f"{workdir}/nodes"))
-    (edges.withColumn("bucket", bucket("hid"))
-          .repartition("bucket")
-          .write.mode(mode).partitionBy("bucket")
-          .parquet(f"{workdir}/edges"))
-    (lineage.withColumn("bucket", bucket("eid"))
-            .repartition("bucket")
-            .write.mode(mode).partitionBy("bucket")
-            .parquet(f"{workdir}/lineage"))
+    for frame, key, table in ((nodes, "eid", "nodes"), (edges, "hid", "edges"),
+                              (lineage, "eid", "lineage")):
+        bucket = F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
+        (frame.withColumn("bucket", bucket)
+              .repartition("bucket").sortWithinPartitions("bucket")
+              .write.mode(mode).parquet(f"{workdir}/{table}"))

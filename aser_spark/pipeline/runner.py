@@ -19,7 +19,7 @@ def build_kg(spark, transcripts: DataFrame, workdir: str | None = None,
     """Run the full pipeline; returns dict of DataFrames + metrics.
 
     With ``workdir``: extraction is checkpointed per conversation-hash
-    partition and graph tables are materialized bucket-partitioned.
+    partition and graph tables are materialized bucket-clustered.
     Without: everything stays lazy/in-memory (test mode).
     """
     t0 = time.time()

@@ -5,8 +5,9 @@ client commands (/root/reference/aser/client/__init__.py:104-349).
 
 Where the reference keeps three in-memory cache modes (insert/cache/memory,
 kg_connection.py:34-91), we have one: Spark's own block cache over the
-bucket-partitioned parquet tables (`cache=True`); point lookups prune
-buckets via the stored bucket column.
+bucket-clustered parquet tables (`cache=True`).  Each bucket is one sorted
+run in one file, so a filter on the stored `bucket` column prunes files and
+row groups by their parquet statistics on that sorted column.
 """
 
 from __future__ import annotations

@@ -636,7 +636,8 @@ def test_conversation_rows_reject_duplicate_or_unordered_turns(turns, message):
     assert conversation_instance_rows("c0", sorted(dict(turns).items()))
 
 
-@pytest.mark.parametrize("kwargs", [{}, {"max_turns": 2, "context_turns": 1}])
+@pytest.mark.parametrize("kwargs", [{}, {"max_turns": 2, "context_turns": 1},
+                                    {"max_turns": 2, "context_turns": 0}])
 def test_extraction_fails_on_duplicate_turn_key(spark, kwargs):
     """A duplicate (conv_id, turn_idx) fails the build, on the shuffled and
     the skew-split path alike, instead of emitting rows from an undefined

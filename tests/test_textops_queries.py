@@ -95,6 +95,9 @@ def test_lsh_ann_agrees_with_brute_force_in_bucket(spark):
 
 
 def test_kgstore_roundtrip(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from aser_spark.datagen import transcripts_df
     from aser_spark.pipeline import build_knowledge_graph, extract_graph_instances
     from aser_spark.pipeline.graph import write_graph_tables
@@ -104,6 +107,23 @@ def test_kgstore_roundtrip(spark, tmp_path):
     nodes, edges, lineage = build_knowledge_graph(inst)
     wd = str(tmp_path / "kg")
     write_graph_tables(nodes, edges, lineage, wd, n_buckets=8)
+
+    # layout: no bucket=k/ directories; each bucket is one sorted run in
+    # exactly one file; bucket is int32 pmod(xxhash64(key), 8)
+    for table, key in (("nodes", "eid"), ("edges", "hid"), ("lineage", "eid")):
+        path = tmp_path / "kg" / table
+        assert not list(path.glob("bucket=*"))
+        owner = {}
+        for part in sorted(path.glob("part-*.parquet")):
+            col = pq.read_table(part, columns=["bucket"]).column("bucket")
+            assert col.type == pa.int32()
+            values = col.to_pylist()
+            assert values == sorted(values)
+            for b in set(values):
+                assert owner.setdefault(b, part.name) == part.name
+        assert owner
+        wrong = F.col("bucket") != F.pmod(F.xxhash64(key), F.lit(8))
+        assert spark.read.parquet(str(path)).filter(wrong).count() == 0
 
     store = KGStore(spark, wd)
     st = store.stats()
