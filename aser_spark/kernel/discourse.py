@@ -19,21 +19,35 @@ pure numpy (kernel/discourse_models.py).
   mirrored: with this connective inventory the only reachable effect is an
   extra overlapping candidate that the used-indices filter then drops, so
   the filtered output is provably identical.)
+* ``_sentence_connectives`` — the D2 filter: one sentence's
+  candidates in the reference's order (sorted by connective string,
+  discourse_parser.py:447-467) that the LR connective classifier accepts.
+  Document eventualities (``classify_connectives``), the per-sentence
+  separators (``sentence_connective_separators``) and the relation pass
+  (``_sentence_connective_rows``) all call it.
 * ``extract_document_eventualities_discourse`` — the
   DiscourseEventualityExtractor loop (eventuality_extractor.py:593-718):
-  classifier-accepted connective token positions become clause separators,
-  each clause's token/lemma/pos/dependency slice is REMAPPED to
-  clause-local indices and re-extracted with the seed-rule kernel, results
-  are mapped back to sentence coordinates and deduplicated on
+  the token positions of the accepted connectives become clause
+  separators, each clause's token/lemma/pos/dependency slice is REMAPPED
+  to clause-local indices and re-extracted with the seed-rule kernel,
+  results are mapped back to sentence coordinates and deduplicated on
   (eid, raw token mapping).
 * ``extract_paragraph_relations_discourse`` — the
   DiscourseRelationExtractor pipeline (relation_extractor.py:348-466):
   sentences without eventualities are replaced by the empty-sentence
   parse (while keeping their REAL syntax trees, mirroring the reference's
-  shared ``syntax_tree_cache``, aser_extractor.py:819), connectives are
-  extracted + classified, split SS/PS, argument spans extracted with the
-  constituent/clause models, senses classified, and each (arg1, arg2)
-  pair Simpson-matched to eventualities with 1/(|E1|*|E2|) weights.
+  shared ``syntax_tree_cache``, aser_extractor.py:819), then per sentence
+  the D2 filter, the SS/PS split, the argument spans from the
+  constituent/clause models and the senses, and each (arg1, arg2) pair
+  Simpson-matched to eventualities with 1/(|E1|*|E2|) weights.
+
+The D2-D6 featurizers share one copy of each helper: the cross-sentence
+token walk (``_adjacent_index``), the sibling lookup and the
+self-parent-left-right context (``_siblings``, ``_nt_ctx``), the Pitler
+categories (``_pitler_categories``) and the root paths
+(``_cparent_paths``, ``_conn_to_root_path``).  The PDTB category of a
+connective is read from the frozen vocabulary
+(``DiscourseModels.conn_category``).
 
 The connective inventory is the public PDTB explicit-connective list (the
 reference ships it as discourse/conn_feats/exp_conn.txt; originally from
@@ -42,7 +56,9 @@ the PDTB 2.0 corpus / Wang & Lan CoNLL-2015 parser resources).
 
 from __future__ import annotations
 
-from .clauses import PUNCTUATION_SET, get_clauses, strip_punctuations
+from .clauses import (CLAUSE_SEPARATOR_SET, PUNCTUATION_SET, get_clauses,
+                      strip_punctuations)
+from .discourse_models import load_discourse_models
 from .extractor import extract_sentence_eventualities
 
 # PDTB 2.0 explicit connectives (public data; reference exp_conn.txt)
@@ -188,115 +204,9 @@ def match_argument_eventuality_by_dependencies(sent_parsed, arg_indices,
     return False
 
 
-# PDTB syntactic category per explicit connective (public PDTB data;
-# the reference ships it as discourse/feats/conn_category.txt)
-CONNECTIVE_CATEGORIES = {
-    "accordingly": "adverbial",
-    "additionally": "adverbial",
-    "afterward": "adverbial",
-    "also": "adverbial",
-    "alternatively": "adverbial",
-    "as a result": "adverbial",
-    "as an alternative": "adverbial",
-    "as well": "adverbial",
-    "besides": "adverbial",
-    "by comparison": "adverbial",
-    "by contrast": "adverbial",
-    "consequently": "adverbial",
-    "conversely": "adverbial",
-    "earlier": "adverbial",
-    "either or": "adverbial",
-    "except": "adverbial",
-    "finally": "adverbial",
-    "for example": "adverbial",
-    "for instance": "adverbial",
-    "further": "adverbial",
-    "furthermore": "adverbial",
-    "hence": "adverbial",
-    "in addition": "adverbial",
-    "in contrast": "adverbial",
-    "in fact": "adverbial",
-    "in other words": "adverbial",
-    "in particular": "adverbial",
-    "in short": "adverbial",
-    "in sum": "adverbial",
-    "in the end": "adverbial",
-    "in turn": "adverbial",
-    "indeed": "adverbial",
-    "instead": "adverbial",
-    "later": "adverbial",
-    "likewise": "adverbial",
-    "meantime": "adverbial",
-    "meanwhile": "adverbial",
-    "moreover": "adverbial",
-    "nevertheless": "adverbial",
-    "next": "adverbial",
-    "nonetheless": "adverbial",
-    "on the contrary": "adverbial",
-    "on the other hand": "adverbial",
-    "otherwise": "adverbial",
-    "overall": "adverbial",
-    "previously": "adverbial",
-    "rather": "adverbial",
-    "regardless": "adverbial",
-    "separately": "adverbial",
-    "similarly": "adverbial",
-    "simultaneously": "adverbial",
-    "specifically": "adverbial",
-    "still": "adverbial",
-    "thereafter": "adverbial",
-    "thereby": "adverbial",
-    "therefore": "adverbial",
-    "thus": "adverbial",
-    "ultimately": "adverbial",
-    "whereas": "adverbial",
-    "by then": "adverbial",
-    "and": "coordinator",
-    "but": "coordinator",
-    "else": "coordinator",
-    "if then": "coordinator",
-    "neither nor": "coordinator",
-    "nor": "coordinator",
-    "on the one hand on the other hand": "coordinator",
-    "or": "coordinator",
-    "plus": "coordinator",
-    "then": "coordinator",
-    "yet": "coordinator",
-    "after": "subordinator",
-    "although": "subordinator",
-    "as": "subordinator",
-    "as if": "subordinator",
-    "as long as": "subordinator",
-    "as soon as": "subordinator",
-    "as though": "subordinator",
-    "because": "subordinator",
-    "before": "subordinator",
-    "before and after": "subordinator",
-    "for": "subordinator",
-    "however": "subordinator",
-    "if": "subordinator",
-    "if and when": "subordinator",
-    "insofar as": "subordinator",
-    "lest": "subordinator",
-    "much as": "subordinator",
-    "now that": "subordinator",
-    "once": "subordinator",
-    "since": "subordinator",
-    "so": "subordinator",
-    "so that": "subordinator",
-    "though": "subordinator",
-    "till": "subordinator",
-    "unless": "subordinator",
-    "until": "subordinator",
-    "when": "subordinator",
-    "when and if": "subordinator",
-    "while": "subordinator",
-}
-
-
 # D4 SSArgumentExtractor constituent-argument feature families
-# (discourse_parser.py:1182-1266); the per-candidate ss_arg classifier is
-# pickled (absent in-sandbox)
+# (discourse_parser.py:1182-1266), scored by the frozen ss_arg model
+# (discourse_models.ss_label)
 SS_ARG_FEATURE_FAMILIES = (
     ("conn", "feat"), ("conn_lower", "feat"), ("nt_ctx", "feat"),
     ("conn_nt_path", "feat"), ("conn_nt_path_left_number", "feat"),
@@ -338,15 +248,14 @@ def constituent_candidates(indices, syntax_tree):
 
 
 def ss_argument_feature_strings(doc_parsed, sent_idx, conn_indices,
-                                syntax_tree,
-                                conn_category_mapping=CONNECTIVE_CATEGORIES):
+                                syntax_tree):
     """Per-constituent raw values for the 9 D4 families
     (discourse_parser.py:1182-1266): one dict per candidate constituent,
     sorted by first token, each carrying its token "indices"."""
     sp = doc_parsed[sent_idx]
     conn = " ".join(sp["tokens"][i] for i in conn_indices)
     conn_lower = conn.lower()
-    conn_category = conn_category_mapping[conn_lower]
+    conn_category = load_discourse_models().conn_category[conn_lower]
     try:
         conn_node = syntax_tree.get_self_category_node_by_token_indices(
             conn_indices)
@@ -355,42 +264,19 @@ def ss_argument_feature_strings(doc_parsed, sent_idx, conn_indices,
     if conn_node is None:
         return []
 
-    left_number = right_number = 0
-    if conn_node.up is not None:
-        children = conn_node.up.get_children()
-        for ci, child in enumerate(children):
-            if child is conn_node:
-                left_number, right_number = ci, len(children) - 1 - ci
-                break
+    _, _, left_number, right_number = _siblings(conn_node)
 
-    cands = constituent_candidates({"indices": conn_indices}["indices"],
-                                   syntax_tree)
+    cands = constituent_candidates(conn_indices, syntax_tree)
     cands.sort(key=lambda x: x["indices"][0])
     rows = []
     for cand in cands:
         node = cand["node"]
-        parent, left, right = node.up, None, None
-        if parent is not None:
-            children = parent.get_children()
-            for ci, child in enumerate(children):
-                if child is node:
-                    if ci > 0:
-                        left = children[ci - 1]
-                    if ci < len(children) - 1:
-                        right = children[ci + 1]
-                    break
-        nt_ctx = "-".join([
-            node.name,
-            parent.name if parent is not None else "NULL",
-            left.name if left is not None else "NULL",
-            right.name if right is not None else "NULL",
-        ])
         conn_nt_path = syntax_tree.get_node_to_node_path(conn_node, node)
         rows.append({
             "indices": cand["indices"],
             "conn": conn,
             "conn_lower": conn_lower,
-            "nt_ctx": nt_ctx,
+            "nt_ctx": _nt_ctx(node),
             "conn_nt_path": conn_nt_path,
             "conn_nt_path_left_number":
                 conn_nt_path + (":>1" if left_number > 1 else ":<=1"),
@@ -404,8 +290,8 @@ def ss_argument_feature_strings(doc_parsed, sent_idx, conn_indices,
 
 # D5 PSArgumentExtractor feature families (discourse_parser.py:1448-1705):
 # arg1 candidates = clauses of the PREVIOUS sentence, arg2 candidates =
-# clauses of the connective's sentence split at the connective; the two
-# pickled clause classifiers are absent in-sandbox
+# clauses of the connective's sentence split at the connective; scored by
+# the frozen ps_arg1/ps_arg2 models (discourse_models.ps1_label/ps2_label)
 PS_ARG1_FEATURE_FAMILIES = (
     ("verb_lemma", "list"), ("clause_first", "feat"), ("clause_last", "feat"),
     ("prev_clause_first", "feat"), ("conn_lower", "feat"),
@@ -424,9 +310,15 @@ PS_ARG2_FEATURE_FAMILIES = (
 _VERB_POS = frozenset(("VB", "VBD", "VBG", "VBN", "VBP", "VBZ"))
 
 
+_MAX_ATTEMPT = 10  # utils.py:48
+
+
 def _adjacent_index(doc_parsed, sent_idx, idx, step, skip_tokens):
-    """(sent_idx, idx) of the adjacent non-skip token, or (-1, -1) —
-    mirrors utils.get_prev/next_token_index with skip_tokens."""
+    """(sent_idx, idx) of the nearest token before (step=-1) or after
+    (step=+1) the given one, across sentence boundaries, that is not in
+    ``skip_tokens``; (-1, -1) past the document edge or after _MAX_ATTEMPT
+    steps — mirrors utils.get_prev/next_token_index (utils.py:407-470).
+    With ``skip_tokens=()`` it is the adjacent token."""
     s, i = sent_idx, idx
     for _ in range(_MAX_ATTEMPT):
         if step < 0:
@@ -455,8 +347,6 @@ def _clause_prev_string(doc_parsed, home_sent, clause_start, fallback_ok):
     token if adjacent, else the separator run between; sentinel rules
     mirrored from discourse_parser.py:1476-1496 (arg1) / :1576-1596 (arg2),
     which differ only in the out-of-sentence fallback condition."""
-    from .clauses import CLAUSE_SEPARATOR_SET
-
     sp = doc_parsed[home_sent]
     if clause_start == 0:
         return "NONE"
@@ -472,8 +362,7 @@ def _clause_prev_string(doc_parsed, home_sent, clause_start, fallback_ok):
 
 
 def ps_argument1_feature_strings(doc_parsed, sent_idx, conn_indices,
-                                 prev_tree,
-                                 conn_category_mapping=CONNECTIVE_CATEGORIES):
+                                 prev_tree):
     """Per-clause raw values for the 6 D5-arg1 families: candidates are the
     clauses of the PREVIOUS sentence (discourse_parser.py:1448-1515).
     Returns [] for a document-initial connective (no previous sentence) —
@@ -486,7 +375,7 @@ def ps_argument1_feature_strings(doc_parsed, sent_idx, conn_indices,
         return []
     conn = " ".join(doc_parsed[sent_idx]["tokens"][i] for i in conn_indices)
     conn_lower = conn.lower()
-    conn_category = conn_category_mapping[conn_lower]
+    conn_category = load_discourse_models().conn_category[conn_lower]
     rows = []
     for clause in clauses:
         clause = list(clause)
@@ -508,20 +397,17 @@ def ps_argument1_feature_strings(doc_parsed, sent_idx, conn_indices,
     return rows
 
 
-def ps_argument2_feature_strings(doc_parsed, sent_idx, conn_indices, tree,
-                                 conn_category_mapping=CONNECTIVE_CATEGORIES):
+def ps_argument2_feature_strings(doc_parsed, sent_idx, conn_indices, tree):
     """Per-clause raw values for the 14 D5-arg2 families: candidates are the
     connective sentence's clauses split at the connective
     (discourse_parser.py:1517-1705)."""
-    from .clauses import CLAUSE_SEPARATOR_SET
-
     sp = doc_parsed[sent_idx]
     clauses = get_clauses(sp["tokens"], tree, set(conn_indices))
     if not clauses:
         return []
     conn = " ".join(sp["tokens"][i] for i in conn_indices)
     conn_lower = conn.lower()
-    conn_category = conn_category_mapping[conn_lower]
+    conn_category = load_discourse_models().conn_category[conn_lower]
     cpos = "_".join(sp["pos_tags"][i] for i in conn_indices)
     try:
         conn_node = tree.get_self_category_node_by_token_indices(conn_indices)
@@ -529,36 +415,10 @@ def ps_argument2_feature_strings(doc_parsed, sent_idx, conn_indices, tree,
         return []
     if conn_node is None:
         return []
-    parent = conn_node.up
-    left = right = None
-    if parent is not None:
-        children = parent.get_children()
-        for ci, child in enumerate(children):
-            if child is conn_node:
-                if ci > 0:
-                    left = children[ci - 1]
-                if ci < len(children) - 1:
-                    right = children[ci + 1]
-    conn_ctx = "-".join([
-        conn_node.name,
-        parent.name if parent is not None else "NULL",
-        left.name if left is not None else "NULL",
-        right.name if right is not None else "NULL",
-    ])
+    conn_ctx = _nt_ctx(conn_node)
 
-    try:
-        conn_paths, cparent_paths = [], []
-        for i in conn_indices:
-            leaf = tree.get_leaf_node_by_token_index(i)
-            conn_paths.append(tree.get_node_path_to_root(leaf))
-            cparent_paths.append(tree.get_node_path_to_root(leaf.up))
-        node_names = [n for p in cparent_paths for n in p.split("-->")]
-        conn_to_root_path = "&".join(conn_paths)
-        compressed = "&".join(_compressed_path(p) for p in cparent_paths)
-    except Exception:
-        node_names = ["NONE_TREE"]
-        conn_to_root_path = "NONE_TREE"
-        compressed = "NONE_TREE"
+    conn_to_root_path = _conn_to_root_path(conn_indices, tree)
+    _, compressed, node_names = _cparent_paths(conn_indices, tree)
 
     rows = []
     for clause_idx, clause in enumerate(clauses):
@@ -655,34 +515,29 @@ def parallel_connective_args(tokens, indices):
     return out
 
 
-def doc_connective_candidates(doc_parsed):
-    """Document-wide connective candidates, each tagged with its sent_idx,
-    in the reference's order: sentence order, then per-sentence sort by
-    connective string (discourse_parser.py:447-467)."""
-    out = []
-    for sent_idx, sp in enumerate(doc_parsed):
-        cands = sorted(extract_connective_candidates(sp["tokens"]),
-                       key=lambda x: x["connective"])
-        for c in cands:
-            out.append({"connective": c["connective"],
-                        "indices": c["indices"], "sent_idx": sent_idx})
-    return out
+def _sentence_connectives(doc_parsed, sent_idx, syntax_tree, models):
+    """D2 for one sentence: its connective candidates, sorted by connective
+    string, that the reference's LR connective filter accepts
+    (ConnectiveExtractor.extract, discourse_parser.py:447-467), each as
+    {"connective", "indices", "sent_idx"}."""
+    kept = []
+    for c in sorted(extract_connective_candidates(
+            doc_parsed[sent_idx]["tokens"]), key=lambda x: x["connective"]):
+        if models.is_connective(connective_feature_strings(
+                doc_parsed, sent_idx, c["indices"], syntax_tree)):
+            c["sent_idx"] = sent_idx
+            kept.append(c)
+    return kept
 
 
 def classify_connectives(doc_parsed, syntax_trees, models=None):
-    """D2: candidate scan + the reference's LR connective filter
-    (ConnectiveExtractor.extract, discourse_parser.py:447-464)."""
+    """D2 over a document: the accepted connectives of every sentence, in
+    sentence order."""
     if models is None:
-        from .discourse_models import load_discourse_models
         models = load_discourse_models()
-    kept = []
-    for c in doc_connective_candidates(doc_parsed):
-        strings = connective_feature_strings(
-            doc_parsed, c["sent_idx"], c["indices"],
-            syntax_trees[c["sent_idx"]])
-        if models.is_connective(strings):
-            kept.append(c)
-    return kept
+    return [c for i in range(len(doc_parsed))
+            for c in _sentence_connectives(doc_parsed, i, syntax_trees[i],
+                                           models)]
 
 
 def _merge_ss_argument(tokens, indices):
@@ -720,8 +575,7 @@ def extract_ss_arguments(doc_parsed, connectives, syntax_trees, models):
                 c["arg2"] = {"sent_idx": sent_idx, "indices": list(clauses[1])}
             continue
         rows = ss_argument_feature_strings(
-            doc_parsed, sent_idx, indices, syntax_trees[sent_idx],
-            conn_category_mapping=models.conn_category)
+            doc_parsed, sent_idx, indices, syntax_trees[sent_idx])
         arg1_idx, arg2_idx = [], []
         for row in rows:
             label = models.ss_label(row)
@@ -769,8 +623,7 @@ def extract_ps_arguments(doc_parsed, connectives, syntax_trees, models):
 
         # ---- Arg1 over the previous sentence's clauses ----
         rows = ps_argument1_feature_strings(
-            doc_parsed, sent_idx, conn_indices, syntax_trees[sent_idx - 1],
-            conn_category_mapping=models.conn_category)
+            doc_parsed, sent_idx, conn_indices, syntax_trees[sent_idx - 1])
         if rows:
             sp1 = doc_parsed[sent_idx - 1]
             labeled = [(list(r["indices"]), models.ps1_label(r)) for r in rows]
@@ -785,8 +638,7 @@ def extract_ps_arguments(doc_parsed, connectives, syntax_trees, models):
 
         # ---- Arg2 over the connective sentence's clauses ----
         rows = ps_argument2_feature_strings(
-            doc_parsed, sent_idx, conn_indices, syntax_trees[sent_idx],
-            conn_category_mapping=models.conn_category)
+            doc_parsed, sent_idx, conn_indices, syntax_trees[sent_idx])
         if rows:
             sp2 = doc_parsed[sent_idx]
             labeled = [(list(r["indices"]), models.ps2_label(r)) for r in rows]
@@ -823,17 +675,8 @@ def _sentence_connective_rows(filtered, sentences, para_eventualities,
     the D2→D3→D4/D5→D6→matching chain restricted to that sentence's
     candidates.  Per-connective independence of every stage makes this
     exactly the per-``i`` slice of the original doc-wide pass."""
-    cands = sorted(extract_connective_candidates(filtered[i]["tokens"]),
-                   key=lambda x: x["connective"])
-    connectives = [
-        {"connective": c["connective"], "indices": list(c["indices"]),
-         "sent_idx": i}
-        for c in cands
-        if models.is_connective(connective_feature_strings(
-            filtered, i, c["indices"], syntax_trees[i]))
-    ]
     ss_conns, ps_conns = [], []
-    for c in connectives:
+    for c in _sentence_connectives(filtered, i, syntax_trees[i], models):
         strings = argument_position_feature_strings(
             filtered, i, c["indices"], syntax_trees[i])
         (ps_conns if models.is_ps(strings) else ss_conns).append(c)
@@ -889,8 +732,6 @@ def extract_paragraph_relations_discourse(sentences, para_eventualities,
        eventualities; emit (hid, tid, sense, 1/(|E1|*|E2|)) instances
        (downstream aggregation sums duplicates exactly as the reference's
        Relation.update accumulation does)."""
-    from .discourse_models import load_discourse_models
-
     models = load_discourse_models()
     if syntax_trees is None:
         syntax_trees = [None] * len(sentences)
@@ -925,15 +766,13 @@ def extract_paragraph_relations_discourse(sentences, para_eventualities,
 # ---------------------------------------------------------------------------
 # D2 feature generation (the 29 feature families of the reference's
 # ConnectiveExtractor, discourse_parser.py:547-758) — fully deterministic
-# given a constituency tree; only the LR weights that CONSUME these are
-# absent in-sandbox.  `connective_feature_strings` emits the raw feature
-# values; `connective_feature_vector` reproduces the reference's
+# given a constituency tree and scored by the frozen connective model
+# (discourse_models.is_connective).  `connective_feature_strings` emits the
+# raw feature values; `connective_feature_vector` reproduces the reference's
 # vocabulary-indexed sparse merge (Feature.get_feature_by_feat +
 # merge_features, discourse_parser.py:63-98) given the per-family vocab
 # dicts (loaded from a PDTB-style feats directory at deploy time).
 # ---------------------------------------------------------------------------
-
-_MAX_ATTEMPT = 10  # utils.py:48
 
 # (family name, kind): 'feat' = single vocab lookup, 'list' = multi lookup,
 # 'raw' = numeric passthrough of dimension 1 — in the reference's exact
@@ -977,27 +816,63 @@ def _compressed_path(path: str) -> str:
 
 def _adjacent_token(doc_parsed, sent_idx, idx, step):
     """Previous (step=-1) / next (step=+1) token across sentence boundaries
-    (utils.py:407-470); returns (token, pos) or ("NONE", "NONE")."""
-    s, i = sent_idx, idx
-    for _ in range(_MAX_ATTEMPT):
-        if step < 0:
-            if i - 1 >= 0:
-                i -= 1
-            elif s - 1 >= 0:
-                s -= 1
-                i = len(doc_parsed[s]["tokens"]) - 1
-            else:
-                return "NONE", "NONE"
-        else:
-            if i + 1 < len(doc_parsed[s]["tokens"]):
-                i += 1
-            elif s + 1 < len(doc_parsed):
-                s += 1
-                i = 0
-            else:
-                return "NONE", "NONE"
-        return doc_parsed[s]["tokens"][i], doc_parsed[s]["pos_tags"][i]
-    return "NONE", "NONE"
+    as (token, pos), or ("NONE", "NONE") past the document edge."""
+    s, i = _adjacent_index(doc_parsed, sent_idx, idx, step, ())
+    if s < 0:
+        return "NONE", "NONE"
+    return doc_parsed[s]["tokens"][i], doc_parsed[s]["pos_tags"][i]
+
+
+def _siblings(node):
+    """(left sibling, right sibling, number of siblings to the left, number
+    to the right) of ``node`` under its parent; (None, None, 0, 0) for the
+    root."""
+    parent = node.up
+    if parent is None:
+        return None, None, 0, 0
+    children = parent.children
+    for ci, child in enumerate(children):
+        if child is node:
+            break
+    last = len(children) - 1
+    return (children[ci - 1] if ci > 0 else None,
+            children[ci + 1] if ci < last else None, ci, last - ci)
+
+
+def _nt_ctx(node):
+    """The reference's self-parent-left-right category context of a node,
+    NULL for each one missing (discourse_parser.py:619-632, 1211-1221)."""
+    parent = node.up
+    left, right, _, _ = _siblings(node)
+    return "-".join([
+        node.name,
+        parent.name if parent is not None else "NULL",
+        left.name if left is not None else "NULL",
+        right.name if right is not None else "NULL",
+    ])
+
+
+def _cparent_paths(indices, syntax_tree):
+    """(cparent_to_root_path, its compressed form, its node names) of a
+    connective — each token's parent-to-root path, '&'-joined (D2 and
+    D5-arg2); all NONE_TREE when a path cannot be built."""
+    try:
+        paths = [syntax_tree.get_node_path_to_root(
+            syntax_tree.get_leaf_node_by_token_index(i).up) for i in indices]
+    except Exception:
+        return "NONE_TREE", "NONE_TREE", ["NONE_TREE"]
+    return ("&".join(paths), "&".join(_compressed_path(p) for p in paths),
+            [n for p in paths for n in p.split("-->")])
+
+
+def _conn_to_root_path(indices, syntax_tree):
+    """Each connective token's leaf-to-root path, '&'-joined (D3 and
+    D5-arg2); NONE_TREE when a path cannot be built."""
+    try:
+        return "&".join(syntax_tree.get_node_path_to_root(
+            syntax_tree.get_leaf_node_by_token_index(i)) for i in indices)
+    except Exception:
+        return "NONE_TREE"
 
 
 def connective_feature_strings(doc_parsed, sent_idx, indices, syntax_tree):
@@ -1009,68 +884,25 @@ def connective_feature_strings(doc_parsed, sent_idx, indices, syntax_tree):
     cpos = "_".join(sp["pos_tags"][i] for i in indices)
     prev, prevpos = _adjacent_token(doc_parsed, sent_idx, indices[0], -1)
     nxt, nextpos = _adjacent_token(doc_parsed, sent_idx, indices[-1], +1)
-
-    try:
-        paths = []
-        for i in indices:
-            leaf = syntax_tree.get_leaf_node_by_token_index(i)
-            paths.append(syntax_tree.get_node_path_to_root(leaf.up))
-        node_names = [n for p in paths for n in p.split("-->")]
-        cpath = "&".join(paths)
-        compressed = "&".join(_compressed_path(p) for p in paths)
-    except Exception:
-        node_names = ["NONE_TREE"]
-        cpath = "NONE_TREE"
-        compressed = "NONE_TREE"
+    cpath, compressed, node_names = _cparent_paths(indices, syntax_tree)
 
     try:
         node = syntax_tree.get_self_category_node_by_token_indices(indices)
-        self_cat = node.name
-        parent = node.up
-        left = right = None
-        if parent is not None:
-            parent_cat = parent.name
-            children = parent.get_children()
-            for ci, child in enumerate(children):
-                if child is node:
-                    if ci > 0:
-                        left = children[ci - 1]
-                    if ci < len(children) - 1:
-                        right = children[ci + 1]
-            left_cat = left.name if left is not None else "NONE"
-            right_cat = right.name if right is not None else "NONE"
-        else:
-            parent_cat, left_cat, right_cat = "ROOT", "NONE", "NONE"
-
-        conn_ctx = "-".join([
-            node.name,
-            parent.name if parent is not None else "NULL",
-            left.name if left is not None else "NULL",
-            right.name if right is not None else "NULL",
-        ])
-        if parent is not None:
-            parent_ctx = "-".join(
-                [parent.name, parent.up.name if parent.up is not None else "NULL"]
-                + [c.name for c in parent.get_children()])
-        else:
-            parent_ctx = "None"
-        left_ctx = ("-".join([left.name, parent.name]
-                             + [c.name for c in left.get_children()])
+        self_cat, parent_cat, left_cat, right_cat, parent_ctx = \
+            _pitler_categories(node)
+        left, right, _, _ = _siblings(node)
+        left_ctx = ("-".join([left.name, node.up.name]
+                             + [c.name for c in left.children])
                     if left is not None else "None")
-        right_ctx = ("-".join([right.name, parent.name]
-                              + [c.name for c in right.get_children()])
+        right_ctx = ("-".join([right.name, node.up.name]
+                              + [c.name for c in right.children])
                      if right is not None else "None")
-
-        right_vp = False
-        if right is not None:
-            if right.name in ("VP", "S"):
-                right_vp = True
-            else:
-                right_vp = any(n.name in ("VP", "S")
-                               for n in right.get_descendants())
+        right_vp = right is not None and (
+            right.name in ("VP", "S")
+            or any(n.name in ("VP", "S") for n in right.get_descendants()))
     except Exception:
         self_cat = parent_cat = left_cat = right_cat = "NONE_TREE"
-        conn_ctx = parent_ctx = left_ctx = right_ctx = "NONE_TREE"
+        parent_ctx = left_ctx = right_ctx = "NONE_TREE"
         right_vp = False
 
     return {
@@ -1136,8 +968,8 @@ def connective_feature_vector(strings: dict, vocab: dict) -> tuple:
 
 
 # D3 ArgumentPositionClassifier feature families
-# (discourse_parser.py:812-915) — SS-vs-PS featurizer; the LR model that
-# consumes them is pickled (absent in-sandbox)
+# (discourse_parser.py:812-915) — SS-vs-PS featurizer, scored by the
+# frozen argument-position model (discourse_models.is_ps)
 ARGPOS_FEATURE_FAMILIES = (
     ("conn", "feat"), ("conn_part", "feat"), ("cpos", "feat"),
     ("prev1", "feat"), ("prev1pos", "feat"), ("prev1_conn", "feat"),
@@ -1149,34 +981,15 @@ ARGPOS_FEATURE_FAMILIES = (
 
 
 def _adjacent2(doc_parsed, sent_idx, idx, step):
-    """Two steps of prev/next with sentence-boundary crossing, returning
-    ((tok1, pos1), (tok2, pos2)) with NONE sentinels — mirrors the nested
-    get_prev/next_token_index chains (discourse_parser.py:836-880)."""
-    s, i = sent_idx, idx
-    out = []
-    for _ in range(2):
-        if step < 0:
-            if i - 1 >= 0:
-                i -= 1
-            elif s - 1 >= 0:
-                s -= 1
-                i = len(doc_parsed[s]["tokens"]) - 1
-            else:
-                out.append(("NONE", "NONE"))
-                break
-        else:
-            if i + 1 < len(doc_parsed[s]["tokens"]):
-                i += 1
-            elif s + 1 < len(doc_parsed):
-                s += 1
-                i = 0
-            else:
-                out.append(("NONE", "NONE"))
-                break
-        out.append((doc_parsed[s]["tokens"][i], doc_parsed[s]["pos_tags"][i]))
-    while len(out) < 2:
-        out.append(("NONE", "NONE"))
-    return out[0], out[1]
+    """The two tokens before (step=-1) or after (step=+1) across sentence
+    boundaries, ((tok1, pos1), (tok2, pos2)) with NONE sentinels — mirrors
+    the nested get_prev/next_token_index chains
+    (discourse_parser.py:836-880)."""
+    s, i = _adjacent_index(doc_parsed, sent_idx, idx, step, ())
+    if s < 0:
+        return ("NONE", "NONE"), ("NONE", "NONE")
+    return ((doc_parsed[s]["tokens"][i], doc_parsed[s]["pos_tags"][i]),
+            _adjacent_token(doc_parsed, s, i, step))
 
 
 def argument_position_feature_strings(doc_parsed, sent_idx, indices,
@@ -1197,14 +1010,7 @@ def argument_position_feature_strings(doc_parsed, sent_idx, indices,
         doc_parsed, sent_idx, indices[0], -1)
     (next1, next1pos), (next2, next2pos) = _adjacent2(
         doc_parsed, sent_idx, indices[-1], +1)
-    try:
-        paths = []
-        for i in indices:
-            leaf = syntax_tree.get_leaf_node_by_token_index(i)
-            paths.append(syntax_tree.get_node_path_to_root(leaf))
-        conn_to_root_path = "&".join(paths)
-    except Exception:
-        conn_to_root_path = "NONE_TREE"
+    conn_to_root_path = _conn_to_root_path(indices, syntax_tree)
     return {
         "conn": conn, "conn_part": conn_part, "cpos": cpos,
         "prev1": prev1, "prev1pos": prev1pos,
@@ -1243,31 +1049,21 @@ EXPLICIT_FEATURE_FAMILIES = (
 )
 
 
-def _pitler_categories(indices, syntax_tree):
-    """(self, parent, left, right, parent_ctx) with the reference's
-    sentinel conventions; shared by the D2/D6 feature generators."""
-    node = syntax_tree.get_self_category_node_by_token_indices(indices)
-    self_cat = node.name
+def _pitler_categories(node):
+    """(self, parent, left, right, parent_ctx) categories of the connective's
+    self-category node with the reference's sentinel conventions (ROOT
+    parent, NONE neighbours, "None" parent context at the root); shared by
+    the D2 and D6 featurizers."""
     parent = node.up
-    left = right = None
-    if parent is not None:
-        parent_cat = parent.name
-        children = parent.get_children()
-        for ci, child in enumerate(children):
-            if child is node:
-                if ci > 0:
-                    left = children[ci - 1]
-                if ci < len(children) - 1:
-                    right = children[ci + 1]
-        left_cat = left.name if left is not None else "NONE"
-        right_cat = right.name if right is not None else "NONE"
-        parent_ctx = "-".join(
-            [parent.name, parent.up.name if parent.up is not None else "NULL"]
-            + [c.name for c in parent.get_children()])
-    else:
-        parent_cat, left_cat, right_cat = "ROOT", "NONE", "NONE"
-        parent_ctx = "None"
-    return self_cat, parent_cat, left_cat, right_cat, parent_ctx
+    if parent is None:
+        return node.name, "ROOT", "NONE", "NONE", "None"
+    left, right, _, _ = _siblings(node)
+    parent_ctx = "-".join(
+        [parent.name, parent.up.name if parent.up is not None else "NULL"]
+        + [c.name for c in parent.children])
+    return (node.name, parent.name,
+            left.name if left is not None else "NONE",
+            right.name if right is not None else "NONE", parent_ctx)
 
 
 def _prev_conn_quirk(sp, indices, word):
@@ -1298,7 +1094,8 @@ def explicit_sense_feature_strings(doc_parsed, sent_idx, indices,
     prev, _ = _adjacent_token(doc_parsed, sent_idx, indices[0], -1)
     try:
         self_cat, parent_cat, left_cat, right_cat, parent_ctx = \
-            _pitler_categories(indices, syntax_tree)
+            _pitler_categories(
+                syntax_tree.get_self_category_node_by_token_indices(indices))
     except Exception:
         self_cat = parent_cat = left_cat = right_cat = "NONE_TREE"
         parent_ctx = "NONE_TREE"
@@ -1401,10 +1198,7 @@ def extract_document_eventualities_discourse(doc_parsed, syntax_trees,
     DiscourseEventualityExtractor._extract_clauses,
     eventuality_extractor.py:694-718), then per-sentence clause
     re-extraction.  Returns one eventuality list per sentence."""
-    from .discourse_models import load_discourse_models
-
-    models = load_discourse_models()
-    conns = classify_connectives(doc_parsed, syntax_trees, models)
+    conns = classify_connectives(doc_parsed, syntax_trees)
     seps = [set() for _ in doc_parsed]
     for c in conns:
         seps[c["sent_idx"]].update(c["indices"])
@@ -1432,8 +1226,6 @@ def sentence_connective_separators(tokens, pos_tags, syntax_tree,
     conn_next/nextpos via get_next_token_index, utils.py:407-470 with no
     skip set), so a one-token context stub reproduces the document-level
     feature values bit-for-bit."""
-    from .discourse_models import load_discourse_models
-
     doc = []
     if prev_ctx is not None:
         doc.append({"tokens": [prev_ctx[0]], "pos_tags": [prev_ctx[1]],
@@ -1444,14 +1236,10 @@ def sentence_connective_separators(tokens, pos_tags, syntax_tree,
         doc.append({"tokens": [next_ctx[0]], "pos_tags": [next_ctx[1]],
                     "lemmas": [next_ctx[0]], "dependencies": []})
 
-    models = load_discourse_models()
     sep = set()
-    for c in sorted(extract_connective_candidates(tokens),
-                    key=lambda x: x["connective"]):
-        strings = connective_feature_strings(doc, sent_idx, c["indices"],
-                                             syntax_tree)
-        if models.is_connective(strings):
-            sep.update(c["indices"])
+    for c in _sentence_connectives(doc, sent_idx, syntax_tree,
+                                   load_discourse_models()):
+        sep.update(c["indices"])
     return tuple(sorted(sep))
 
 

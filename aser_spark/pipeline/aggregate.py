@@ -93,23 +93,18 @@ def build_lineage(ev_instances: DataFrame, n_salts: int = DEFAULT_SALTS,
         "eid", sid,
         F.pmod(F.xxhash64("conv_id"), F.lit(n_salts)).alias("_salt"),
     )
-    if max_sids is None:
-        partial = salted.groupBy("eid", "_salt").agg(
-            F.collect_set("sid").alias("sids"),
-            F.count("*").alias("n"),
-        )
-        return partial.groupBy("eid").agg(
-            F.array_distinct(F.flatten(F.collect_list("sids"))).alias("sids"),
-            F.sum("n").alias("n_mentions"),
-        )
-    k = int(max_sids)
+
+    def cap(sids):
+        if max_sids is None:
+            return sids
+        return F.slice(F.sort_array(sids), 1, int(max_sids))
+
     partial = salted.groupBy("eid", "_salt").agg(
-        F.slice(F.sort_array(F.collect_set("sid")), 1, k).alias("sids"),
+        cap(F.collect_set("sid")).alias("sids"),
         F.count("*").alias("n"),
     )
     return partial.groupBy("eid").agg(
-        F.slice(F.sort_array(F.array_distinct(
-            F.flatten(F.collect_list("sids")))), 1, k).alias("sids"),
+        cap(F.array_distinct(F.flatten(F.collect_list("sids")))).alias("sids"),
         F.sum("n").alias("n_mentions"),
     )
 

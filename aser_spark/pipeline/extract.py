@@ -21,7 +21,7 @@ Scale design
 
 from __future__ import annotations
 
-from ..schemas import INSTANCE_SCHEMA
+from ..schemas import COVERAGE_SCHEMA, INSTANCE_SCHEMA
 
 
 def _sentence_cache(mode: str = "seed"):
@@ -453,25 +453,6 @@ def extract_graph_instances(transcripts, num_partitions=None, pre_grouped=False,
     return grouped.mapInArrow(run_chunks, schema=INSTANCE_SCHEMA)
 
 
-COVERAGE_SCHEMA = ("conv_id string, turn_idx int, sent_idx int, "
-                   "n_tokens int, pos_tags string, n_eventualities int, "
-                   "covered boolean")
-def _coverage_struct():
-    """StructType equivalent of COVERAGE_SCHEMA, built without a JVM (the
-    DDL parser needs an active session — unavailable inside workers)."""
-    from pyspark.sql import types as T
-
-    return T.StructType([
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("sent_idx", T.IntegerType()),
-        T.StructField("n_tokens", T.IntegerType()),
-        T.StructField("pos_tags", T.StringType()),
-        T.StructField("n_eventualities", T.IntegerType()),
-        T.StructField("covered", T.BooleanType()),
-    ])
-
-
 def turn_coverage_rows(conv_id, turn_idx, text, memo=None):
     """Pure per-turn parse-coverage kernel: EVERY sentence yields exactly
     one row — covered sentences report how many eventualities the grammar
@@ -503,7 +484,7 @@ def parse_coverage(transcripts):
     def run(batches):
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        arrow_schema = to_arrow_schema(_coverage_struct())
+        arrow_schema = to_arrow_schema(COVERAGE_SCHEMA)
         memo = _sentence_cache("seed")  # one memo per task
         for rb in batches:
             out = []

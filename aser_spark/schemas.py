@@ -1,10 +1,11 @@
-"""Explicit StructType schemas for every pipeline table.
+"""Explicit StructType schemas for the tables the extraction UDFs emit.
 
 The reference keeps row dicts with conventional keys
-(/root/reference/aser/extract/utils.py:234-277 for parsed sentences,
-aser/database/kg_connection.py:13-27 for the KG tables); we pin real
+(aser/extract/utils.py:234-277 for parsed sentences); we pin real
 columnar schemas so Parquet/Iceberg scans prune columns and Catalyst sees
-types.
+types.  A StructType needs no JVM to build, so the workers derive their
+Arrow output schema from the same object the driver passes to
+``mapInArrow``.
 """
 
 from pyspark.sql import types as T
@@ -38,22 +39,14 @@ INSTANCE_SCHEMA = T.StructType([
     T.StructField("ners", T.StringType(), True),
 ])
 
-# aggregated graph tables (the reference's Eventualities/Relations tables,
-# kg_connection.py:13-27, with proper types instead of JSON blobs)
-NODE_SCHEMA = T.StructType([
-    T.StructField("eid", T.StringType(), False),
-    T.StructField("pattern", T.StringType(), False),
-    T.StructField("words", T.StringType(), False),
-    T.StructField("pos_tags", T.StringType(), False),
-    T.StructField("skeleton_words", T.StringType(), False),
-    T.StructField("verbs", T.StringType(), False),
-    T.StructField("frequency", T.DoubleType(), False),
-])
-
-EDGE_SCHEMA = T.StructType([
-    T.StructField("rid", T.StringType(), False),
-    T.StructField("hid", T.StringType(), False),
-    T.StructField("tid", T.StringType(), False),
-    T.StructField("sense", T.StringType(), False),
-    T.StructField("weight", T.DoubleType(), False),
+# per-sentence grammar coverage (pipeline.extract.parse_coverage): one row
+# per sentence, covered or not
+COVERAGE_SCHEMA = T.StructType([
+    T.StructField("conv_id", T.StringType()),
+    T.StructField("turn_idx", T.IntegerType()),
+    T.StructField("sent_idx", T.IntegerType()),
+    T.StructField("n_tokens", T.IntegerType()),
+    T.StructField("pos_tags", T.StringType()),
+    T.StructField("n_eventualities", T.IntegerType()),
+    T.StructField("covered", T.BooleanType()),
 ])

@@ -74,7 +74,6 @@ def main():
 
     spark = get_spark(app="aser-bench", cpus=CPUS,
                       shuffle_partitions=max(CPUS * 2, 16))
-    E._ship_package(spark)
     timings: dict[str, float] = {}
     extras: dict = {}
 

@@ -192,10 +192,12 @@ def main():
             return f"{n()} that {vi()} {n()} was quiet."   # no-ev (honest OOG)
         return f"{vb()} {n()} now."                        # imperative, no-ev
 
-    from aser_spark.kernel.discourse import CONNECTIVE_CATEGORIES
+    from aser_spark.kernel.discourse_models import load_discourse_models
+
+    categories = load_discourse_models().conn_category
 
     def category(c):
-        return CONNECTIVE_CATEGORIES.get(c.replace("..", " "), "adverbial")
+        return categories.get(c.replace("..", " "), "adverbial")
 
     # medial run-ons only read naturally for subordinators/coordinators;
     # adverbial connectives open their own sentence (real-text placement)

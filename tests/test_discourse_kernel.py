@@ -326,6 +326,73 @@ def test_ss_argument_constituent_features():
     assert main["conn_nt_position"] == "middle"   # reference quirk: always
 
 
+def test_argument_feature_strings_digest():
+    """D4/D5 featurizer and separator pin: the ss rows of every contiguous
+    connective candidate, the ps1/ps2 rows of every candidate past the
+    first sentence, and every sentence's separators with its one-token
+    neighbour contexts, over the connective-feature fixture documents, the
+    four held-out corpora and the out-of-generator corpus, hash to the
+    recorded sha256."""
+    import hashlib
+
+    from aser_spark.kernel.discourse import (extract_connective_candidates,
+                                             ps_argument1_feature_strings,
+                                             ps_argument2_feature_strings,
+                                             sentence_connective_separators,
+                                             ss_argument_feature_strings)
+
+    fixtures = Path(__file__).parent.parent / "fixtures"
+    docs, seen = [], set()
+    for name in ("golden_connective_features", "heldout_prose",
+                 "heldout_prose2", "heldout_prose3", "heldout_prose4",
+                 "oog_docs"):
+        with open(fixtures / f"{name}.jsonl") as f:
+            for line in f:
+                texts = json.loads(line)["doc_texts"]
+                key = json.dumps(texts)
+                if key not in seen:
+                    seen.add(key)
+                    docs.append(texts)
+
+    digest = hashlib.sha256()
+    n_sents = n_cands = 0
+    for texts in docs:
+        parsed, trees = _parse_doc(texts)
+        for i, sp in enumerate(parsed):
+            prev_ctx = next_ctx = None
+            if i > 0 and parsed[i - 1]["tokens"]:
+                prev_ctx = (parsed[i - 1]["tokens"][-1],
+                            parsed[i - 1]["pos_tags"][-1])
+            if i + 1 < len(parsed) and parsed[i + 1]["tokens"]:
+                next_ctx = (parsed[i + 1]["tokens"][0],
+                            parsed[i + 1]["pos_tags"][0])
+            record = {
+                "prev_ctx": prev_ctx, "next_ctx": next_ctx,
+                "separators": sentence_connective_separators(
+                    sp["tokens"], sp["pos_tags"], trees[i], prev_ctx,
+                    next_ctx),
+                "candidates": [],
+            }
+            for c in extract_connective_candidates(sp["tokens"]):
+                idx = c["indices"]
+                cand = {"connective": c["connective"], "indices": idx}
+                if all(a + 1 == b for a, b in zip(idx, idx[1:])):
+                    cand["ss"] = ss_argument_feature_strings(
+                        parsed, i, idx, trees[i])
+                if i > 0:
+                    cand["ps1"] = ps_argument1_feature_strings(
+                        parsed, i, idx, trees[i - 1])
+                    cand["ps2"] = ps_argument2_feature_strings(
+                        parsed, i, idx, trees[i])
+                record["candidates"].append(cand)
+                n_cands += 1
+            digest.update(json.dumps(record, sort_keys=True).encode())
+            n_sents += 1
+    assert (len(docs), n_sents, n_cands) == (1683, 5616, 3042)
+    assert digest.hexdigest() == (
+        "270d2f75567eb9331a9dbd098e59552ec5aa8317ce20167c261aa461b1362b85")
+
+
 def test_memoized_pipeline_path_equals_document_level():
     """The SHIPPED discourse path (pipeline/extract.py's two-level
     per-sentence memo with one-token boundary context) must reproduce

@@ -240,6 +240,37 @@ def test_alternating_modes_on_reused_workers_identical_rows(spark):
     t.unpersist()
 
 
+def test_extraction_rows_match_recorded_digests(spark):
+    """Output identity of the extraction paths over 3,000 generated
+    conversations (seed 42): the sha256 of the sorted row reprs of the
+    seed path, the discourse path and the parse-coverage table equals the
+    recorded value, so a refactor of the kernels or the Arrow boundary
+    that changes any row fails here."""
+    import hashlib
+
+    from aser_spark.datagen import transcripts_df
+    from aser_spark.pipeline import extract_graph_instances
+    from aser_spark.pipeline.extract import parse_coverage
+
+    t = transcripts_df(spark, 3000, seed=42).cache()
+
+    def digest(df):
+        rows = df.collect()
+        text = "\n".join(sorted(repr(r) for r in rows))
+        return len(rows), hashlib.sha256(text.encode()).hexdigest()
+
+    assert digest(extract_graph_instances(t)) == (
+        95145,
+        "5124437d68733fab9e35aff7d584b4bcdf47bd39883e02ff81f0bd35144f93f9")
+    assert digest(extract_graph_instances(t, mode="discourse")) == (
+        107926,
+        "0a41586d18916dd6b9d87067a9bc6fefa8f3d54ba166f3f3609094cb54bab482")
+    assert digest(parse_coverage(t)) == (
+        48148,
+        "2c42f0620ee9eb3f63ff26115adc3a62dd7cf18b4425ff0bc288987f6184bc78")
+    t.unpersist()
+
+
 def test_merge_lineage_matches_full_build(spark, transcripts):
     """Bounded lineage composes: min-K of a union is recoverable from the
     union of the min-Ks, so merge_lineage(lineage(A), B) equals
